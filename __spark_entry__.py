@@ -22,9 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from watchman_spark import queries as _registry  # noqa: E402
 from watchman_spark.config import PipelineConfig  # noqa: E402
 from watchman_spark.operators.aggregate import per_sink_counts  # noqa: E402
-from watchman_spark.operators.enrich import enrich  # noqa: E402
-from watchman_spark.operators.parse import with_parsed  # noqa: E402
-from watchman_spark.operators.route import with_sink  # noqa: E402
+from watchman_spark.plans.pipeline import tag  # noqa: E402
 from watchman_spark.queries_fn import _line_expr  # noqa: E402
 from watchman_spark.synth import role_dim, tool_dim  # noqa: E402
 
@@ -52,31 +50,10 @@ def _events_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     cfg = PipelineConfig(warehouse="/unused", n_buckets=32)
-    # r6: the per-sink aggregate reads only (sink, conv_id), so the
-    # bucket repartition that build_routed appends for the WRITE path is
-    # pure cost here — a full exchange of every column feeding an
-    # aggregate that immediately re-partitions by sink. (Catalyst's
-    # EliminateSorts had already dropped the turn sort — and with it the
-    # row_number window — below the aggregate, but it cannot remove a
-    # user-requested repartition.) Building the map-side prefix only
-    # (parse → enrich → sink-tag) leaves the aggregate's own two-phase
-    # exchanges as the only shuffles (plan: plans/r06/pipeline_per_sink_*,
-    # 3 Exchange → 2; guide §2.4 — remove shuffles outright). Routing
-    # semantics are untouched (same parse, same routes, same oracle).
-    tagged = with_sink(
-        enrich(
-            with_parsed(
-                _events_as_transcripts(spark, sf_dir),
-                cfg.patterns,
-                engine=cfg.parse_engine,
-            ),
-            role_dim(spark),
-            tool_dim(spark),
-        ),
-        routes=cfg.routes,
-        default_sink=cfg.default_sink,
-    )
-    return per_sink_counts(tagged)
+    # map-side prefix only: the aggregate needs no bucket exchange
+    # (OPTIMIZATION_r06.md, "Routed write")
+    events = _events_as_transcripts(spark, sf_dir)
+    return per_sink_counts(tag(events, cfg, role_dim(spark), tool_dim(spark)))
 
 
 # the flagship is itself oracle-checked: the router's sink decision (via

@@ -174,22 +174,14 @@ def run_parse_route_only(spark, path: str) -> tuple[int, float]:
     from pyspark.sql import functions as F
 
     from watchman_spark.config import PipelineConfig
-    from watchman_spark.operators.enrich import enrich
-    from watchman_spark.operators.parse import with_parsed
-    from watchman_spark.operators.route import with_sink
+    from watchman_spark.plans.pipeline import tag
     from watchman_spark.schema import TRANSCRIPT_SCHEMA
     from watchman_spark.synth import role_dim, tool_dim
 
     cfg = PipelineConfig(warehouse="/unused")
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(path)
     t0 = time.time()
-    tagged = with_sink(
-        enrich(
-            with_parsed(df, cfg.patterns, engine=cfg.parse_engine),
-            role_dim(spark),
-            tool_dim(spark),
-        )
-    )
+    tagged = tag(df, cfg, role_dim(spark), tool_dim(spark))
     row = tagged.select(
         F.count(F.lit(1)).alias("n"),
         F.count("parsed.tool_name").alias("n_tool"),

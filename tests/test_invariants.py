@@ -146,19 +146,16 @@ def test_text_equality_audit_with_null_conv_rows(spark, tmp_path):
     }
 
 
-def test_turn_order_is_physical_in_files(wh):
-    """The ordering invariant is a property of the written files, not a
-    read-time sort: scanning any sink data file RAW (pyarrow, no Spark, no
-    ordering) must yield turn_idx already sorted within each conv_id run.
-    Guards the write-aligned sortWithinPartitions against regressions (the
-    dynamic-partition writer would otherwise re-sort by partition columns
-    only, destroying turn order)."""
+def assert_turn_order_physical(wh, sink: str) -> None:
+    """Scan every data file of ``sink_<sink>`` RAW (pyarrow, no Spark, no
+    ordering): turn_idx must already be sorted within each conv_id run,
+    and each conversation's run must be contiguous."""
     import os
 
     import pyarrow.dataset as pa_ds
 
     checked_files = 0
-    for c in wh.commits("sink_conversational"):
+    for c in wh.commits(f"sink_{sink}"):
         d = os.path.join(wh.root, c["data_dir"])
         ds = pa_ds.dataset(d, format="parquet", partitioning="hive")
         for frag in ds.get_fragments():
@@ -177,6 +174,30 @@ def test_turn_order_is_physical_in_files(wh):
                 prev_conv = cid
             checked_files += 1
     assert checked_files > 0
+
+
+def test_turn_order_is_physical_in_files(wh):
+    """The ordering invariant is a property of the written files, not a
+    read-time sort. Guards the write-aligned sortWithinPartitions against
+    regressions (the dynamic-partition writer would otherwise re-sort by
+    partition columns only, destroying turn order)."""
+    assert_turn_order_physical(wh, "conversational")
+
+
+def test_stream_turn_order_is_physical_in_files(spark, tmp_path):
+    """The same file-level invariant for the streaming router: route_batch
+    runs the shared staged write, with the shuffle-key sub-split (S=2 at
+    8 buckets on local[4])."""
+    from watchman_spark.streaming.stream import route_batch
+
+    root = str(tmp_path / "stream_wh")
+    w = ParquetWarehouse(root)
+    cfg = PipelineConfig(warehouse=root, n_buckets=8, run_id="inv-stream")
+    batch = synth_transcripts(spark, PARAMS)
+    committed = route_batch(w, cfg, batch, 0, role_dim(spark), tool_dim(spark))
+    assert len(committed) == len(cfg.sink_names)
+    for sink in cfg.sink_names:
+        assert_turn_order_physical(w, sink)
 
 
 def test_job_audit_subcommand(spark, wh):

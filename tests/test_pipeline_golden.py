@@ -103,7 +103,8 @@ def test_custom_routes_end_to_end(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from watchman_spark.config import PipelineConfig
-    from watchman_spark.plans.pipeline import build_routed, run_pipeline
+    from watchman_spark.operators.route import with_conv_bucket
+    from watchman_spark.plans.pipeline import StagedWrite, run_pipeline
     from watchman_spark.sources.warehouse import ParquetWarehouse
     from watchman_spark.synth import SynthParams, role_dim, synth_transcripts, tool_dim
 
@@ -123,9 +124,8 @@ def test_custom_routes_end_to_end(spark, tmp_path):
     m = run_pipeline(spark, cfg)
 
     # expected split computed directly from the routed logical plan
-    routed = build_routed(
-        wh.read(spark, "transcripts"), cfg, role_dim(spark), tool_dim(spark)
-    )
+    keyed = with_conv_bucket(wh.read(spark, "transcripts"), cfg.n_buckets)
+    routed = StagedWrite(keyed, cfg, cfg.run_id, role_dim(spark), tool_dim(spark)).plan
     expected = {
         r["sink"]: r["n"]
         for r in routed.groupBy("sink").agg(F.count(F.lit(1)).alias("n")).collect()

@@ -122,12 +122,15 @@ def test_agg_readback_prunes_columns(spark, tmp_path):
 
 
 def test_pipeline_single_exchange(spark, tmp_path):
-    """The batch pipeline plan has exactly one all-to-all exchange (the
-    conv_bucket repartition) plus the broadcast exchanges for dims."""
+    """The routed write's plan — the one run_pipeline and route_batch
+    write — has exactly one all-to-all exchange (the conv_bucket
+    repartition with its sub-split key: S=4 at 4 buckets on local[4])
+    plus the broadcast exchanges for dims."""
     import re
 
     from watchman_spark.config import PipelineConfig
-    from watchman_spark.plans.pipeline import build_routed
+    from watchman_spark.operators.route import with_conv_bucket
+    from watchman_spark.plans.pipeline import StagedWrite
     from watchman_spark.schema import TRANSCRIPT_SCHEMA
     from watchman_spark.synth import SynthParams, role_dim, synth_transcripts, tool_dim
 
@@ -135,15 +138,29 @@ def test_pipeline_single_exchange(spark, tmp_path):
     synth_transcripts(spark, SynthParams(seed=1, n_convs=10, C=50, hot_cap=20)).write.parquet(src)
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(src)
     cfg = PipelineConfig(warehouse="/unused", n_buckets=4)
+    keyed = with_conv_bucket(df, cfg.n_buckets)
     plan = (
-        build_routed(df, cfg, role_dim(spark), tool_dim(spark))
-        ._jdf.queryExecution()
+        StagedWrite(keyed, cfg, cfg.run_id, role_dim(spark), tool_dim(spark))
+        .plan._jdf.queryExecution()
         .executedPlan()
         .toString()
     )
     shuffles = re.findall(r"Exchange hashpartitioning", plan)
     assert len(shuffles) == 1, plan[:500]
     assert plan.count("BroadcastExchange") == 2
+    assert re.search(
+        r"Exchange hashpartitioning\(conv_bucket#\d+, "
+        r"pmod\(xxhash64\(1, conv_id#\d+, 42\), 4\), 16\)",
+        plan,
+    ), plan[:500]
+
+
+def test_flagship_builds_prefix_only(spark):
+    """pipeline_per_sink aggregates ``tag``'s map-side prefix: its own
+    two-phase aggregate exchanges are the only shuffles, with no bucket
+    repartition in front (plans/r06/pipeline_per_sink_after.txt)."""
+    plan = plan_of(spark, "pipeline_per_sink")
+    assert plan.count("Exchange hashpartitioning") == 2, plan[:800]
 
 
 def test_knn_join_no_cartesian_and_windowed(spark):

@@ -125,7 +125,7 @@ def test_route_batch_parses_once(spark, tmp_path_factory, monkeypatch):
     exactly once per epoch (one staged partitionBy write), not once per
     sink. A pass-through pandas UDF on the text column counts the rows that
     actually flow through the parse stage."""
-    import watchman_spark.streaming.stream as stream_mod
+    import watchman_spark.plans.pipeline as pipeline_mod
     from pyspark.sql.functions import pandas_udf
 
     acc = spark.sparkContext.accumulator(0)
@@ -135,9 +135,9 @@ def test_route_batch_parses_once(spark, tmp_path_factory, monkeypatch):
         acc.add(len(s))
         return s
 
-    real = stream_mod.with_parsed
+    real = pipeline_mod.with_parsed
     monkeypatch.setattr(
-        stream_mod,
+        pipeline_mod,
         "with_parsed",
         lambda df, *a, **kw: real(df.withColumn("text", tap("text")), *a, **kw),
     )

@@ -8,12 +8,10 @@ partition the input — Σ sink counts == total rows is a tested invariant.
 Routing is CONFIG-DRIVEN (config.py routes — BASELINE.json:6 "mirroring
 watchman's configurable output routing"): ordered SQL rules compiled into
 one JVM CASE chain, first match wins, catch-all default sink keeps the
-rule total — Σ sink counts == total rows is a tested invariant. The only
-wide exchange in the whole pipeline is the explicit conv_id/conv_bucket
-repartition here, which also establishes the stable turn ordering
-invariant (conv_id hash-partitioning plus turn_idx sortWithinPartitions,
-BASELINE.json:6); the fan-out itself is a single partitionBy write
-(plans/pipeline.py).
+rule total — Σ sink counts == total rows is a tested invariant.
+``conv_bucket`` is the pipeline's partition layout and checkpoint unit; the
+conv_bucket exchange, the turn-order sort and the single partitionBy
+fan-out live in plans/pipeline.py (StagedWrite).
 """
 
 from __future__ import annotations
@@ -58,27 +56,3 @@ def with_conv_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
     return df.withColumn(
         "conv_bucket", F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
     )
-
-
-def ordered_by_turn(
-    df: DataFrame, n_partitions: int | None = None, key: str = "conv_id"
-) -> DataFrame:
-    """The ordering half of the text-equality invariant (BASELINE.json:6):
-    hash-partition by conv_id (or its derived conv_bucket, which co-locates
-    whole conversations identically), sort each partition by
-    (conv_id, turn_idx). This is the pipeline's single explicit shuffle.
-
-    Always pass an explicit ``n_partitions`` in batch jobs: without it AQE
-    coalesces the post-shuffle stage to ~64MB partitions, which serializes
-    the downstream sort/write onto a handful of cores (measured 2-3x
-    slowdown at bench scale)."""
-    parted = (
-        df.repartition(n_partitions, key) if n_partitions else df.repartition(key)
-    )
-    return parted.sortWithinPartitions("conv_id", "turn_idx")
-
-
-# NOTE: the round-1 ``split_by_sink`` (persist + one filter per sink) was
-# removed: both the batch pipeline and the streaming router fan out via a
-# single partitionBy("sink", "conv_bucket") staged write + per-sink atomic
-# commits — the data is written once and never re-filtered.

@@ -19,9 +19,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import PipelineConfig
-from ..operators.enrich import enrich
-from ..operators.parse import flatten_parsed, with_parsed
-from ..operators.route import with_conv_bucket, with_sink
+from ..operators.route import with_conv_bucket
+from ..plans.pipeline import StagedWrite, tag
 from ..schema import TRANSCRIPT_SCHEMA
 from ..sources.warehouse import ParquetWarehouse
 
@@ -46,11 +45,7 @@ def windowed_sink_counts(
 ) -> DataFrame:
     """T1+T2/T3: per-sink counts per event-time window, late data bounded
     by the watermark so window state can be evicted."""
-    tagged = with_sink(
-        with_parsed(stream, cfg.patterns, engine=cfg.parse_engine),
-        routes=cfg.routes,
-        default_sink=cfg.default_sink,
-    )
+    tagged = tag(stream, cfg)
     win = F.window("ts", window, slide) if slide else F.window("ts", window)
     return (
         tagged.withWatermark("ts", watermark)
@@ -112,11 +107,9 @@ def route_batch(
       a (run_id, epoch) lineage entry are skipped, so a crash between
       per-sink commits cannot double-append (tests/test_stream.py replays
       the same epoch and asserts counts unchanged);
-    - parse/enrich/route execute ONCE per micro-batch: a single
-      partitionBy("sink", ...) write stages every sink's subtree in one
-      Spark action (the batch pipeline's plan, plans/pipeline.py), after
-      which per-sink commits are atomic renames. The previous shape — one
-      filter+append action per sink — re-ran the parse 3x per epoch.
+    - parse/enrich/route execute ONCE per micro-batch: the batch run's
+      StagedWrite (plans/pipeline.py) stages every sink's subtree in one
+      Spark action, after which per-sink commits are atomic renames.
 
     Returns the sinks committed by this call ([] == full replay skip).
 
@@ -130,10 +123,6 @@ def route_batch(
     this; a stream over a source that changed since the last run must use
     a fresh run_id, otherwise its epochs would be wrongly skipped.
     """
-    import os
-    import shutil
-    import uuid
-
     done = (
         done_sinks
         if done_sinks is not None
@@ -147,54 +136,14 @@ def route_batch(
         # foreachBatch returns without consuming the batch
         batch_df.count()
         return []
-    # SHUFFLE FIRST, exactly like the batch pipeline (plans/pipeline.py):
-    # a micro-batch arrives in arbitrary partitioning (often 1-2 file
-    # partitions, or the dedup state exchange's layout) — without the
-    # bucket repartition, parse runs at the source's parallelism and EVERY
-    # write task spans all buckets, so an epoch fans out to
-    # n_tasks x n_sinks x n_buckets small files (measured 12s/epoch fixed
-    # cost at 146k-row epochs). Bucket-aligned, each task writes its own
-    # bucket's ~n_sinks files and parse gets full parallelism (measured:
-    # whole-stream wall 3.1x faster at 8 epochs, 2.2x at 64 epochs —
-    # BENCH/STREAMING.md).
-    raw = with_conv_bucket(batch_df, cfg.n_buckets).repartition(
-        cfg.n_buckets, "conv_bucket"
-    )
-    routed = (
-        flatten_parsed(
-            with_sink(
-                enrich(
-                    with_parsed(raw, cfg.patterns, engine=cfg.parse_engine),
-                    role_dim,
-                    tool_dim,
-                ),
-                routes=cfg.routes,
-                default_sink=cfg.default_sink,
-            )
-        )
-        .sortWithinPartitions("sink", "conv_bucket", "conv_id", "turn_idx")
-        .withColumn("dt", F.to_date("ts"))
-        .withColumn("run_id", F.lit(f"epoch-{epoch_id}"))
-    )
-    staging = os.path.join(cfg.warehouse, "_staging", f"epoch-{uuid.uuid4().hex}")
-    committed: list[str] = []
-    try:
-        routed.write.partitionBy("sink", "conv_bucket").parquet(staging)
-        lineage = {"run_id": cfg.run_id, "epoch": epoch_id}
-        for sink in cfg.sink_names:
-            subdir = os.path.join(staging, f"sink={sink}")
-            if sink in done or not os.path.isdir(subdir):
-                continue
-            wh.commit_existing(
-                f"sink_{sink}", subdir, partition_by=["conv_bucket"], lineage=lineage
-            )
-            committed.append(sink)
-    finally:
-        # committed subtrees were MOVED out by commit_existing; on failure
-        # the leftover staging is garbage — a replayed epoch recomputes it,
-        # so cleanup cannot lose data and prevents unbounded _staging growth
-        shutil.rmtree(staging, ignore_errors=True)
-    return committed
+    # the batch run's staged write, bucket-aligned so parse gets full
+    # parallelism and each task writes only its buckets' files
+    # (measurements: BENCH/STREAMING.md)
+    keyed = with_conv_bucket(batch_df, cfg.n_buckets)
+    with StagedWrite(keyed, cfg, f"epoch-{epoch_id}", role_dim, tool_dim) as st:
+        st.write()
+        st.footer_stats()
+        return st.commit(wh, {"run_id": cfg.run_id, "epoch": epoch_id}, skip=done)
 
 
 def route_stream(
