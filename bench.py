@@ -87,9 +87,6 @@ def get_session(cpus: int):
             "spark.local.dir": os.environ.get(
                 "WATCHMAN_LOCAL_DIR", os.path.join(_fast_dir(), "spark-local")
             ),
-            # local mode: driver JVM == executor; size the heap for the
-            # machine (128 GiB), not the 8g library default
-            "spark.driver.memory": os.environ.get("WATCHMAN_DRIVER_MEM", "48g"),
         },
     )
 

@@ -4,6 +4,8 @@ that stay correct but lose pushdown/broadcast/partial-agg at scale."""
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -187,7 +189,7 @@ def test_resolve_edge_build_single_exchange_single_scan(spark):
     """r6: the symmetrized-edge build (a) reads the pair plan ONCE — the
     two directions come from an explode, not a union whose branches would
     each re-execute the full pair-generation subplan — and (b) shuffles
-    ONCE: repartition("src") then dropDuplicates(["src","dst"]) —
+    ONCE: repartition(n, "src") then dropDuplicates(["src","dst"]) —
     HashPartitioning(src) satisfies the (src, dst) dedup clustering (src
     is a subset of the keys), so the aggregate adds no second exchange.
     The old unionByName + distinct().repartition() shape did both twice."""
@@ -202,10 +204,158 @@ def test_resolve_edge_build_single_exchange_single_scan(spark):
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    deduped = edges.repartition("src").dropDuplicates(["src", "dst"])
+    n_parts = spark.sparkContext.defaultParallelism
+    deduped = edges.repartition(n_parts, "src").dropDuplicates(["src", "dst"])
     plan = deduped._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert plan.count("Scan ExistingRDD") == 1, plan  # pair plan read once
+
+
+def _plan_children(node):
+    """Child plan nodes, looking through AQE's wrapper and its shuffle
+    stages. A stage over a cached table is a leaf here."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [node.executedPlan()]
+    if name.endswith("QueryStage") and name != "TableCacheQueryStage":
+        return [node.plan()]
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _reshuffled_cache_reads(plan, key: str) -> list[str]:
+    """Exchanges hash-partitioned on ``key`` whose input is a cached-table
+    scan through narrow operators only: places where a reader re-shuffled
+    a cached table instead of reusing its partitioning. Also searches the
+    plans that built the cached tables ``plan`` reads."""
+    hits = []
+
+    def reads_cache(node) -> bool:
+        name = node.nodeName()
+        if name in ("TableCacheQueryStage", "InMemoryTableScan"):
+            return True
+        if any(s in name for s in ("Join", "Aggregate", "Exchange", "QueryStage", "Window")):
+            return False
+        return any(reads_cache(c) for c in _plan_children(node))
+
+    def walk(node):
+        if node.nodeName() == "TableCacheQueryStage":
+            node = node.plan()
+        if node.nodeName() == "InMemoryTableScan":
+            walk(node.relation().cachedPlan())
+            return
+        text = node.simpleString(100)
+        if text.startswith(f"Exchange hashpartitioning({key}#") and any(
+            reads_cache(c) for c in _plan_children(node)
+        ):
+            hits.append(text)
+        for child in _plan_children(node):
+            walk(child)
+
+    walk(plan)
+    return hits
+
+
+@contextlib.contextmanager
+def _broadcast_joins_off(spark):
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _record_checkpointed_plans(monkeypatch) -> list:
+    """Collect the final physical plan of every localCheckpoint'ed frame."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan())
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
+def test_resolve_iterations_reuse_edge_partitioning(spark, monkeypatch):
+    """Every label-propagation iteration joins the cached edge table
+    through its own HashPartitioning(src, n): no Exchange between the
+    SortMergeJoin and the cache scan, even with broadcast joins off. AQE
+    may resize a cached plan's last stage (session.py), so this holds only
+    because the edge table is repartitioned to an explicit count."""
+    from watchman_spark.operators.dedup import resolve_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], "id_a long, id_b long"
+    )
+    plans = _record_checkpointed_plans(monkeypatch)
+    with _broadcast_joins_off(spark):
+        resolve_components(chain).collect()
+    iterations = [p for p in plans if "SortMergeJoin" in p.toString()]
+    assert len(iterations) >= 2, len(iterations)
+    for plan in iterations:
+        assert not _reshuffled_cache_reads(plan, "src"), plan.toString()
+
+
+def _record_persisted(monkeypatch) -> list:
+    """Collect every DataFrame that is persisted while the patch is on."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    frames = []
+    persist = DataFrame.persist
+
+    def recording(self, *args, **kwargs):
+        frames.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "persist", recording)
+    return frames
+
+
+def _cached_partitions(spark, df) -> int:
+    """Partition count of the cache entry that holds ``df``."""
+    entry = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    assert entry.isDefined(), df.columns
+    relation = entry.get().cachedRepresentation()
+    return relation.cacheBuilder().cachedColumnBuffers().getNumPartitions()
+
+
+def test_cached_intermediates_sized_by_aqe(spark, monkeypatch):
+    """AQE sizes persisted plans from their bytes: the signature table and
+    the drift bins hold fewer partitions than spark.sql.shuffle.partitions.
+    The edge table keeps its explicit defaultParallelism count."""
+    spark.catalog.clearCache()
+    persisted = _record_persisted(monkeypatch)
+    for name in ("dedup_lsh_clusters", "drift_doclen_tv"):
+        QUERIES[name](spark, SF).write.format("noop").mode("overwrite").save()
+
+    def partitions(is_table) -> int:
+        found = [_cached_partitions(spark, df) for df in persisted if is_table(df.columns)]
+        assert len(found) == 1, [df.columns for df in persisted]
+        return found[0]
+
+    try:
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert partitions(lambda c: c == ["id", "sig"]) < shuffle_parts
+        assert partitions(lambda c: "n_ref" in c and "n_cur" in c) < shuffle_parts
+        edges = partitions(lambda c: c == ["src", "dst"])
+        assert edges == spark.sparkContext.defaultParallelism
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_retention_single_scan_no_self_join(spark):

@@ -258,19 +258,11 @@ class PipelineConfig:
     default_sink: str = DEFAULT_SINK
     n_buckets: int = 32  # conv_id hash buckets = checkpoint/work unit
     # "pandas" (Arrow iterator UDF, one C-level str.extract per pattern)
-    # | "jvm" (rlike + regexp_extract; zero Python boundary). Round-6
-    # re-measure at 9.4M turns, 32 cores, with the post-shuffle stage
-    # isolated (noop sink): jvm 4.0s vs pandas 8.3s for the identical
-    # parse→enrich→route projection — at full core counts the 32 Arrow
-    # Python workers double the process pressure on one box, and the
-    # r6 shuffle/sort fixes shrank everything AROUND the parse, so the
-    # engines are no longer within drift (round 3 measured them even
-    # because the write stage dominated). Default is now jvm for the
-    # small default registry (2 patterns / 7 groups). The trade-off is
-    # unchanged and documented: the JVM path re-executes the regex once
-    # per capture group, so for production registries with tens of
-    # patterns/groups choose engine="pandas" (one C-level extract pass
-    # per pattern regardless of group count) — it is one config key.
+    # | "jvm" (rlike + regexp_extract; zero Python boundary). jvm measured
+    # ~2x faster on the small default registry; registries with tens of
+    # patterns/groups favour "pandas", because jvm re-runs the regex once
+    # per capture group. Measurements: OPTIMIZATION_r06.md "Parse engine
+    # default (notes moved from code)".
     parse_engine: str = "jvm"
     run_id: str = "run-0"
     # cap buckets per run (None = all pending): bounds a run's blast radius

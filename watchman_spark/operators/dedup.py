@@ -36,10 +36,15 @@ DEFAULT_MAX_BUCKET = 500
 
 def _reused(df: DataFrame) -> DataFrame:
     """Persist an intermediate that appears on multiple branches of the
-    same DAG (self-joins recompute each branch otherwise — measured 3-5x
-    recomputation of the shingle/signature sub-plan). MEMORY_AND_DISK so
-    large shingle tables spill instead of OOMing; Spark evicts under
-    pressure, so this is safe to leave un-unpersisted on query handles."""
+    same DAG (self-joins recompute each branch otherwise). MEMORY_AND_DISK
+    so large shingle tables spill instead of OOMing; Spark evicts under
+    pressure, so this is safe to leave un-unpersisted on query handles.
+
+    The cached table's partition count is AQE's choice, sized from its
+    bytes (session.py sets canChangeCachedPlanOutputPartitioning), unless
+    the caller repartitions to an explicit count first because a reader
+    relies on the table's hash partitioning (resolve_components' edges;
+    OPTIMIZATION_r06.md "Cached-plan partitioning")."""
     return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
@@ -154,25 +159,15 @@ def _sigs_from_shingle_arrays(
     docs: DataFrame, n_hashes: int, portable: bool
 ) -> DataFrame:
     """(id, sig) from a (id, sh) shingle-array table: explode + groupBy
-    with n_hashes MIN aggregates. Measured FASTER than the tempting
-    map-side array_min(transform(...)) form (3.6s vs 9.8s at sf1.0):
-    higher-order-function lambdas are evaluated interpretively per
-    element, while Generate + hash-aggregate both run in whole-stage
-    codegen, and the map-side partial aggregation collapses the exchange
-    to one partial row per doc before it ships (guide §2.3).
+    with n_hashes MIN aggregates, which runs in whole-stage codegen
+    (faster than a map-side array_min(transform(...)) lambda).
 
-    ``docs`` must be a PERSISTED (or otherwise plan-barriered) table.
-    Explode of a plain ``sh`` attribute makes InferFiltersFromGenerate
-    add a ``size(sh) > 0 AND sh IS NOT NULL`` predicate (the rule skips
-    expensive inline children per SPARK-36715, but an attribute looks
-    cheap), and predicate pushdown then substitutes the FULL shingle
-    expression — with ``split(text)`` re-inlined into every element_at —
-    below the words-staging projection: O(words²·k) per doc inside a
-    filter. Measured 160-180 s vs ~8 s at sf1.0 for the signature pass
-    (plans/r06/minhash_sig_inferfilter_*). The cache boundary stops the
-    pushdown, so the inferred filter evaluates on cached arrays instead.
-    Un-persisted callers go through minhash_signatures below, which
-    explodes the inline expression (rule-skipped) instead."""
+    ``docs`` must be a PERSISTED (or otherwise plan-barriered) table:
+    exploding a plain ``sh`` attribute lets InferFiltersFromGenerate push
+    the whole shingle expression below the words staging, O(words²·k)
+    per doc. Un-persisted callers go through minhash_signatures below.
+    Measurements: OPTIMIZATION_r06.md "Dedup (design notes moved from
+    code)"."""
     sh = docs.select("id", F.explode("sh").alias("shingle"))
     return _agg_sigs(sh, n_hashes, portable)
 
@@ -314,21 +309,13 @@ def minhash_signatures(
     in every engine — the same cross-engine trick that made the LSH plane
     literals oracle-checkable (similarity.plane_signs). ~2-3x slower; use
     the portable form for cross-engine audits, the default in production.
+    Values are oracle-pinned by the dedup_minhash_lsh_portable /
+    dedup_ingest_match_portable queries.
 
-    r6: the shingle base is the staged-words form (_words_staged — the
-    old inline word_shingles re-split the text once per shingle, O(words²)
-    per doc); the explode + groupBy(n_hashes × MIN) aggregation itself is
-    kept deliberately — see _sigs_from_shingle_arrays for the measured
-    codegen-vs-lambda comparison. Values are oracle-pinned by the
-    dedup_minhash_lsh_portable / dedup_ingest_match_portable queries.
-
-    r6 second pass: the explode goes through shingle_table (Generate over
-    the INLINE shingle expression) rather than a (id, sh) projection —
-    InferFiltersFromGenerate skips expensive inline children but fires on
-    attribute children, and its pushed-down size() filter re-inlines
-    split(text) into every shingle slice: measured 160-180 s vs ~8 s for
-    this pass at sf1.0 (see _sigs_from_shingle_arrays docstring). Same
-    exploded rows, same mins, same signatures."""
+    The explode goes through shingle_table (Generate over the INLINE
+    shingle expression, which InferFiltersFromGenerate skips), not an
+    (id, sh) projection; see _sigs_from_shingle_arrays and
+    OPTIMIZATION_r06.md §2."""
     return _agg_sigs(shingle_table(df, id_col, text_col, k), n_hashes, portable)
 
 
@@ -395,23 +382,12 @@ def minhash_lsh_pairs(
     jaccard verify below is unaffected (full shingle sets). The capped path
     is the DEFAULT; pass ``max_bucket=None`` to opt out of the bound.
     """
-    # r6 shape (guide §2.3/§2.4, measured in OPTIMIZATION_r06.md): ONE
-    # persisted (id, shingle-array) table feeds BOTH the signature/banding
-    # side and the exact verify — the old shape computed the shingle
-    # table twice from raw text (once under the signature groupBy, once
-    # for the verify joins; each with the O(words²) inline-split shingle
-    # expression) and pushed (candidate × shingle) exploded rows through a
-    # count exchange. Now: staged shingle arrays once, codegen'd
-    # explode+groupBy signatures from them, and a verify that is two id
-    # equi-joins + a map-side array_intersect.
+    # ONE persisted (id, shingle-array) table feeds both the signatures and
+    # the exact verify; `banded` stays unpersisted (measured a wash).
+    # Shape history: OPTIMIZATION_r06.md "Dedup (design notes moved from code)".
     docs = _reused(_shingle_arrays(df, id_col, text_col, k))
     sigs = _reused(_sigs_from_shingle_arrays(docs, n_hashes, portable))
     banded = band_digest_table(sigs, n_hashes, bands, portable)
-    # (measured, round 4) persisting `banded` before the cap — so the
-    # hot-key count and the candidate join share one materialization — is a
-    # wash at bench scale (5 interleaved A/B cycles, median speedup 0.99):
-    # re-deriving the band explode from the persisted `sigs` is already
-    # cheap, and the extra persist adds its own memory/eviction traffic.
     banded = _drop_hot_keys(banded, ["band", "digest"], max_bucket)
     a = banded.alias("a")
     b = banded.alias("b")
@@ -715,14 +691,8 @@ def resolve_components(
     otherwise compounds lineage until planning itself dominates). Per
     iteration: one shuffle of |E| rows on id — no driver-side graph, no
     collect; the only driver value is the per-iteration changed-count."""
-    # r6: symmetrize by EXPLODING each pair into its two directions instead
-    # of unionByName(pairs, swapped(pairs)) — the union's two branches each
-    # contained the FULL upstream pair-generation plan (candidate join +
-    # exact verify for the dedup pair tables), and Spark does not
-    # common-subexpression-eliminate across union branches, so the most
-    # expensive part of dedup_resolve / dedup_lsh_clusters executed TWICE
-    # (guide §1.2 "don't compute things you throw away"; verified in the
-    # before-plan's duplicated join subtrees, plans/r06).
+    # symmetrize by EXPLODING each pair into both directions: a union of
+    # pairs and swapped pairs would run the pair plan twice (OPTIMIZATION_r06.md §3)
     edges = pairs.select(
         F.explode(
             F.array(
@@ -731,17 +701,13 @@ def resolve_components(
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # r6: pre-partition the persisted edge table BY THE JOIN KEY — its
-    # HashPartitioning(src) satisfies every iteration's join requirement,
-    # so only the (tiny) label table is exchanged per iteration instead of
-    # re-shuffling |E| edge rows every round (guide §2.4: two operations
-    # keyed the same way share one exchange). The symmetrize-dedup runs
-    # AFTER the repartition for the same reason: HashPartitioning(src)
-    # already co-locates every (src, dst) group (src ⊆ the dedup keys), so
-    # dropDuplicates adds NO second exchange — the old
-    # distinct().repartition("src") shuffled the edge table twice
-    # (plan-asserted single-Exchange in tests/test_plans.py).
-    edges = _reused(edges.repartition("src").dropDuplicates(["src", "dst"]))
+    # partitioned by the join key with an explicit count, which AQE does
+    # not resize: every iteration's join reads the cache without
+    # re-shuffling |E| rows, and the dedup adds no exchange (src ⊆ its
+    # keys). Plan-asserted in tests/test_plans.py; see OPTIMIZATION_r06.md
+    # §3 and "Cached-plan partitioning".
+    n_parts = pairs.sparkSession.sparkContext.defaultParallelism
+    edges = _reused(edges.repartition(n_parts, "src").dropDuplicates(["src", "dst"]))
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -756,12 +722,9 @@ def resolve_components(
             # id/comp type — ids may be strings, so never hard-code long)
             .withColumn("prev", F.lit(None).cast(labels.schema["comp"].dataType))
         )
-        # r6: the previous label rides the union as a `prev` column (each
-        # id has exactly one self row, so MIN(prev) recovers it), which
-        # folds the convergence check into the SAME aggregation — the old
-        # shape ran a separate new⋈old join job per iteration. Labels are
-        # monotone non-increasing, so "changed" == "comp < prev"; the
-        # count is a scan of the just-checkpointed rows, no join.
+        # the previous label rides the union as `prev` (one self row per
+        # id), so the convergence check is the same aggregation: labels
+        # only decrease, hence "changed" == "comp < prev".
         new_labels = (
             neighbor_comp.unionByName(
                 labels.select("id", "comp", F.col("comp").alias("prev"))

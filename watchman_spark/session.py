@@ -21,6 +21,12 @@ _DEFAULTS = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE size the final stage of persisted plans too (the 4.1 default
+    # freezes a cached table that ends in a shuffle at shuffle.partitions:
+    # 64 near-empty partitions per later scan). A cached table whose hash
+    # partitioning a reader relies on repartitions to an explicit count,
+    # which AQE leaves alone (operators/dedup.resolve_components' edges).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Bigger Arrow batches amortize the JVM<->Python transfer per the
     # vectorized-UDF cost model (PAPERS.md:6); regex work is per-row cheap,
