@@ -20,6 +20,7 @@ Copy k of a fact table offsets its keys by k*STRIDE so PK/FK joins keep
 the same selectivity; n_nationkey/r_regionkey stay in range.
 
 Usage: python bench_extra_datagen.py [outdir]   (default /dev/shm/sf1.0)
+Then: SPARK_GRAFT_SF_DIR=/dev/shm/sf1.0 python bench.py
 """
 
 from __future__ import annotations

@@ -78,18 +78,8 @@ DEFAULT_PATTERNS: tuple[GrokPattern, ...] = (
         types={"err_ms": "int"},
     ),
 )
-# Prefilters are deliberately OFF for the default registry, and the A/B is
-# now measured at BOTH densities (BENCH/PREFILTER.md, 10M rows, both
-# engines, median of interleaved cycles): no reliable win anywhere —
-# ~40% match is noise-level on both engines (0.99-1.01x), and at the ~2%
-# log-typical sparse mix the jvm engine skews slightly NEGATIVE (~0.92x)
-# while pandas is neutral-to-slightly-positive (1.03-1.15x across runs,
-# within host drift). Reason: these regexes are anchored on literals
-# ("[tool:", "ERROR E"), so a failed regex search is already one linear
-# scan with a literal-prefix fast path in both engines; the contains()
-# gate re-scans the same bytes. Reach for prefilter="..." only when a
-# pattern's failure path is super-linear (backtracking-prone, no literal
-# anchor) — and re-measure with `python bench.py --prefilter-ab`.
+# Prefilters stay OFF: these literal-anchored regexes already fail in one
+# linear scan, so a contains() gate only re-scans (BENCH/PREFILTER.md).
 
 # Output routing is DATA too (BASELINE.json:6 "mirroring watchman's
 # configurable output routing"): an ordered list of (sink_name, SQL
