@@ -123,6 +123,8 @@ def test_partitioned_read_enforces_declared_types(spark, tmp_path):
     types = {f.name: f.dataType for f in out.schema.fields}
     assert types["v"] == LongType()
     assert out.count() == 12
+    pruned = wh.read_pruned(spark, "t", "v", lo=1, hi=3, schema=schema)
+    assert pruned.schema["v"].dataType == LongType()
 
     # sibling-prefix path must NOT be accepted as "inside the warehouse"
     sibling = root + "-other"
@@ -131,6 +133,50 @@ def test_partitioned_read_enforces_declared_types(spark, tmp_path):
     os.makedirs(os.path.join(sibling, "data"), exist_ok=True)
     with _pytest.raises(ValueError):
         wh.commit_existing("t", os.path.join(sibling, "data"))
+
+
+@pytest.mark.parametrize(
+    "op", ["write_append", "write_append_arrow", "commit_existing", "compact", "merge_upsert"]
+)
+def test_crash_at_commit_write_leaves_table_unchanged(spark, tmp_path, monkeypatch, op):
+    """Every data-committing operation publishes through the one atomic
+    commit-json write. A crash there, after the data dir is staged, must
+    leave the table as it was (snapshot, live rows, contents) and the
+    staged dir an orphan that remove_orphans reclaims."""
+    import os
+
+    import pyarrow as pa
+
+    from watchman_spark.sources import warehouse as wh_mod
+
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    df = spark.range(4).select(F.col("id").alias("k"), F.col("id").cast("string").alias("v"))
+    wh.write_append(df, "t")
+    wh.write_append(df.withColumn("k", F.col("k") + 4), "t")
+    staged = os.path.join(wh.root, "_staging", "s")
+    df.write.parquet(staged)
+
+    def state():
+        return wh.snapshot("t"), wh.table_rows("t"), sorted(wh.read(spark, "t").collect())
+
+    before = state()
+    run = {
+        "write_append": lambda: wh.write_append(df, "t"),
+        "write_append_arrow": lambda: wh.write_append_arrow("t", pa.table({"k": [9], "v": ["9"]})),
+        "commit_existing": lambda: wh.commit_existing("t", staged),
+        "compact": lambda: wh.compact(spark, "t"),
+        "merge_upsert": lambda: wh.merge_upsert(spark, "t", df.limit(1), keys=["k"]),
+    }[op]
+
+    def crash(path, obj):
+        raise OSError("injected crash at the commit write")
+
+    monkeypatch.setattr(wh_mod, "_atomic_json", crash)
+    with pytest.raises(OSError, match="injected crash"):
+        run()
+    monkeypatch.undo()
+    assert state() == before
+    assert len(wh.remove_orphans("t", older_than_s=0)) == 1
 
 
 def test_empty_input_runs_and_is_idempotent(spark, tmp_path_factory):

@@ -1,5 +1,5 @@
 """Metadata file-skipping (Iceberg scan-planning analogue): write_append
-records per-file column bounds (warehouse.file_bounds — the manifest-entry
+records per-file column bounds (warehouse.file_stats — the manifest-entry
 lower_bounds/upper_bounds of the Iceberg spec), plan_pruned drops files
 whose range cannot contain a match, and read_pruned == read + filter ALWAYS
 (pruning is a superset guarantee; the predicate is re-applied to surviving

@@ -51,7 +51,7 @@ from ..operators.parse import flatten_parsed, with_parsed
 from ..operators.route import with_conv_bucket, with_sink
 from ..schema import ROLE_DIM_SCHEMA, TOOL_DIM_SCHEMA, TRANSCRIPT_SCHEMA
 from ..sources import checkpoint as ckpt
-from ..sources.warehouse import ParquetWarehouse
+from ..sources.warehouse import ParquetWarehouse, file_stats
 
 
 def tag(
@@ -131,8 +131,7 @@ class StagedWrite:
         self.sink_rows: dict[str, int] = dict.fromkeys(self.sink_names, 0)
         self.sink_n_text: dict[str, int] = {}
         self.bucket_stats: dict[int, dict] = {}
-        frags = ParquetWarehouse.dir_stats(self.path, stat_col="conv_id", notnull_col="text")
-        for fs in frags:
+        for fs in file_stats(self.path, ["conv_id"], notnull_col="text"):
             parts = dict(p.split("=", 1) for p in fs["path"].split(os.sep) if "=" in p)
             sink = parts["sink"]
             self.sink_rows[sink] += fs["rows"]
@@ -141,9 +140,9 @@ class StagedWrite:
                 int(parts["conv_bucket"]), {"rows": 0, "min": None, "max": None}
             )
             b["rows"] += fs["rows"]
-            if fs["min"] is not None:
-                b["min"] = fs["min"] if b["min"] is None else min(b["min"], fs["min"])
-                b["max"] = fs["max"] if b["max"] is None else max(b["max"], fs["max"])
+            if (cb := fs["bounds"]["conv_id"]) is not None:
+                b["min"] = cb[0] if b["min"] is None else min(b["min"], cb[0])
+                b["max"] = cb[1] if b["max"] is None else max(b["max"], cb[1])
 
     def commit(
         self, wh: ParquetWarehouse, lineage: dict, skip: Container[str] = ()

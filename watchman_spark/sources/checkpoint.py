@@ -19,11 +19,9 @@ import datetime as dt
 
 from pyspark.sql import SparkSession
 
-from ..schema import SINKS
 from .warehouse import ParquetWarehouse
 
 LEDGER_TABLE = "ledger"
-DATA_TABLES = tuple(f"sink_{s}" for s in SINKS) + ("agg_sink_counts", "agg_conv_role_tool")
 
 
 def committed_buckets(spark: SparkSession, wh: ParquetWarehouse) -> set[int]:

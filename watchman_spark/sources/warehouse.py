@@ -69,6 +69,63 @@ def _norm_stat(v):
     return v
 
 
+def _atomic_json(path: str, obj) -> None:
+    """Write ``obj`` as json to a temp name beside ``path``, fsync, then
+    os.replace onto it: the one atomic-visibility write behind every
+    commit, manifest and manifest rewrite. A crash before the replace
+    leaves an invisible tmp file and the old state intact."""
+    tmp = os.path.join(os.path.dirname(path), f".tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def file_stats(
+    data_dir: str, cols: list[str], notnull_col: str | None = None
+) -> list[dict]:
+    """Per-FILE parquet footer stats: hive-relative ``path``, ``rows``,
+    ``bounds`` (min/max per column of ``cols``) and ``notnull`` (the
+    non-null value count of ``notnull_col``, None without one). The
+    bounds are the Iceberg manifest-entry ``lower_bounds``/``upper_bounds``
+    analogue: recorded at write time they buy metadata-only file skipping
+    on every pruned read. A column with no usable statistics in some row
+    group maps to None, so the planner keeps that file (pruning is only
+    ever a superset guarantee)."""
+    out = []
+    for frag in pa_ds.dataset(data_dir, format="parquet", partitioning="hive").get_fragments():
+        md = frag.metadata
+        schema = md.schema.to_arrow_schema()
+        rgs = [md.row_group(i) for i in range(md.num_row_groups)]
+        bounds: dict[str, list | None] = {}
+        for col in cols:
+            idx = schema.get_field_index(col)
+            sts = [rg.column(idx).statistics for rg in rgs] if idx >= 0 else []
+            if not sts or any(st is None or not st.has_min_max for st in sts):
+                bounds[col] = None  # one stat-less row group poisons the file
+            else:
+                bounds[col] = [min(_norm_stat(st.min) for st in sts),
+                               max(_norm_stat(st.max) for st in sts)]
+        notnull = None
+        nidx = schema.get_field_index(notnull_col) if notnull_col else -1
+        if nidx >= 0:
+            notnull = 0
+            for i, rg in enumerate(rgs):
+                st = rg.column(nidx).statistics
+                if st is None or not st.has_null_count:  # pragma: no cover
+                    # parquet-mr always writes null_count; if a foreign writer
+                    # omitted it the caller must not get a wrong counter
+                    raise ValueError(
+                        f"{frag.path}: row group {i} lacks null_count "
+                        f"statistics for column {notnull_col!r}"
+                    )
+                notnull += rg.num_rows - st.null_count
+        out.append({"path": os.path.relpath(frag.path, data_dir),
+                    "rows": md.num_rows, "bounds": bounds, "notnull": notnull})
+    return out
+
+
 class ParquetWarehouse:
     """See module docstring for the commit protocol. Snapshot resolution is
     kept O(tail) by MANIFEST COMPACTION (the Iceberg manifest-list
@@ -155,41 +212,66 @@ class ParquetWarehouse:
             live[c["id"]] = c
         return [live[k] for k in sorted(live)]
 
-    def _next_commit_id(self, table: str) -> int:
-        return self.snapshot(table) + 1
+    def _write_manifest(self, table: str) -> None:
+        """Checkpoint the full ascending commit list into one atomic
+        manifest file named after the newest commit it covers. A crash
+        mid-write leaves readers on the loose commits."""
+        cs = self.commits(table)
+        if cs:
+            path = os.path.join(self._commits_dir(table), f"manifest-{cs[-1]['id']:08d}.json")
+            _atomic_json(path, {"id": cs[-1]["id"], "commits": cs})
 
-    def _write_commit(self, table: str, meta: dict) -> dict:
+    def _commit(
+        self,
+        table: str,
+        data_dir: str,
+        rows: int | None,
+        partition_by: list[str] | None = None,
+        lineage: dict | None = None,
+        stats_cols: list[str] | None = None,
+        **rewrite,
+    ) -> dict:
+        """The only place commit metadata is made: publish the staged
+        ``data_dir`` as the table's next commit with one atomic json write
+        (step 2 of the protocol). ``rows`` None counts them from the footers;
+        ``stats_cols`` records per-file bounds of those columns
+        (file_stats) for read_pruned; ``rewrite`` carries a replace
+        commit's ``op``/``replaces``/``rows_changed``. Returns the meta."""
+        meta = {
+            **rewrite,
+            "data_dir": os.path.relpath(data_dir, self.root),
+            "rows": self._count_rows(data_dir) if rows is None else rows,
+            "partition_by": partition_by or [],
+            "lineage": lineage or {},
+        }
+        if stats_cols:
+            files = file_stats(data_dir, list(stats_cols))
+            meta["file_stats"] = {
+                "cols": list(stats_cols),
+                "files": [{"path": f["path"], "bounds": f["bounds"]} for f in files],
+            }
         cdir = self._commits_dir(table)
         os.makedirs(cdir, exist_ok=True)
-        cid = self._next_commit_id(table)
+        cid = self.snapshot(table) + 1
         meta = {"id": cid, "ts": time.time(), **meta}
-        tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(cdir, f"{cid:08d}.json"))
+        _atomic_json(os.path.join(cdir, f"{cid:08d}.json"), meta)
         if self.manifest_every and cid % self.manifest_every == 0:
             self._write_manifest(table)
         return meta
 
-    def _write_manifest(self, table: str) -> None:
-        """Checkpoint the full ascending commit list into one atomic
-        manifest file named after the newest commit it covers. Same
-        tmp+fsync+replace protocol as commits: a crash mid-write leaves an
-        invisible tmp file and readers fall back to the loose commits."""
-        cs = self.commits(table)
-        if not cs:
-            return
-        cdir = self._commits_dir(table)
-        tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"id": cs[-1]["id"], "commits": cs}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, os.path.join(cdir, f"manifest-{cs[-1]['id']:08d}.json"))
-
     # -- write -----------------------------------------------------------
+    def _write_df(
+        self, df: DataFrame, table: str, partition_by: list[str] | None = None
+    ) -> str:
+        """Stage ``df`` as parquet under a fresh data dir of ``table``
+        (step 1 of the protocol: invisible until committed)."""
+        data_dir = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(data_dir)
+        return data_dir
+
     def write_append(
         self,
         df: DataFrame,
@@ -202,29 +284,12 @@ class ParquetWarehouse:
 
         Row count comes from parquet footers (no second Spark job).
         ``stats_cols`` additionally records per-FILE min/max bounds of
-        those columns in the commit metadata (file_bounds), enabling
+        those columns in the commit metadata (file_stats), enabling
         metadata-only file skipping via read_pruned() — one extra footer
         pass over the just-written files, no data scan.
         """
-        token = uuid.uuid4().hex
-        data_dir = os.path.join(self._tdir(table), "data", token)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
-        rows = self._count_rows(data_dir)
-        meta = {
-            "data_dir": os.path.relpath(data_dir, self.root),
-            "rows": rows,
-            "partition_by": partition_by or [],
-            "lineage": lineage or {},
-        }
-        if stats_cols:
-            meta["file_stats"] = {
-                "cols": list(stats_cols),
-                "files": self.file_bounds(data_dir, list(stats_cols)),
-            }
-        return self._write_commit(table, meta)
+        data_dir = self._write_df(df, table, partition_by)
+        return self._commit(table, data_dir, None, partition_by, lineage, stats_cols)
 
     def commit_existing(
         self,
@@ -233,7 +298,6 @@ class ParquetWarehouse:
         rows: int | None = None,
         partition_by: list[str] | None = None,
         lineage: dict | None = None,
-        stats_cols: list[str] | None = None,
     ) -> dict:
         """Atomically commit an already-staged directory (single-pass
         multi-sink fan-out: one partitionBy("sink", ...) write produces one
@@ -249,20 +313,7 @@ class ParquetWarehouse:
         dest = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
         os.makedirs(os.path.dirname(dest), exist_ok=True)
         os.replace(data_dir, dest)
-        if rows is None:
-            rows = self._count_rows(dest)
-        meta = {
-            "data_dir": os.path.relpath(dest, self.root),
-            "rows": rows,
-            "partition_by": partition_by or [],
-            "lineage": lineage or {},
-        }
-        if stats_cols:
-            meta["file_stats"] = {
-                "cols": list(stats_cols),
-                "files": self.file_bounds(dest, list(stats_cols)),
-            }
-        return self._write_commit(table, meta)
+        return self._commit(table, dest, rows, partition_by, lineage)
 
     def write_append_arrow(
         self, table: str, data: pa.Table, lineage: dict | None = None
@@ -271,19 +322,10 @@ class ParquetWarehouse:
         aggregate partials) — no Spark job, same commit protocol. Every
         Spark job carries ~0.2-0.5s of scheduling overhead; metadata-sized
         writes through the JVM are pure serial (Amdahl) cost."""
-        token = uuid.uuid4().hex
-        data_dir = os.path.join(self._tdir(table), "data", token)
+        data_dir = os.path.join(self._tdir(table), "data", uuid.uuid4().hex)
         os.makedirs(data_dir, exist_ok=True)
         pa_pq.write_table(data, os.path.join(data_dir, "part-0.parquet"))
-        return self._write_commit(
-            table,
-            {
-                "data_dir": os.path.relpath(data_dir, self.root),
-                "rows": data.num_rows,
-                "partition_by": [],
-                "lineage": lineage or {},
-            },
-        )
+        return self._commit(table, data_dir, data.num_rows, lineage=lineage)
 
     def read_arrow(self, table: str) -> pa.Table | None:
         """Driver-side snapshot read (small, unpartitioned tables only —
@@ -306,85 +348,6 @@ class ParquetWarehouse:
     def _count_rows(data_dir: str) -> int:
         ds = pa_ds.dataset(data_dir, format="parquet", partitioning="hive")
         return sum(f.metadata.num_rows for f in ds.get_fragments())
-
-    @staticmethod
-    def dir_stats(
-        data_dir: str, stat_col: str | None = None, notnull_col: str | None = None
-    ) -> list[dict]:
-        """Per-fragment footer stats: hive partition path, num_rows, min/max
-        of ``stat_col``, and (when ``notnull_col`` is given) the non-null
-        value count of that column — all from row-group statistics/footers,
-        lineage and audit counters without a second scan."""
-        ds = pa_ds.dataset(data_dir, format="parquet", partitioning="hive")
-        out = []
-        for frag in ds.get_fragments():
-            rel = os.path.relpath(frag.path, data_dir)
-            md = frag.metadata
-            lo = hi = None
-            notnull = None
-            schema = md.schema.to_arrow_schema()
-            if stat_col is not None:
-                idx = schema.get_field_index(stat_col)
-                if idx >= 0:
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx).statistics
-                        if st is not None and st.has_min_max:
-                            lo = st.min if lo is None else min(lo, st.min)
-                            hi = st.max if hi is None else max(hi, st.max)
-            if notnull_col is not None:
-                nidx = schema.get_field_index(notnull_col)
-                if nidx >= 0:
-                    notnull = 0
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(nidx).statistics
-                        rows = md.row_group(rg).num_rows
-                        if st is not None and st.has_null_count:
-                            notnull += rows - st.null_count
-                        else:  # pragma: no cover — parquet-mr always writes
-                            # null_count; if a foreign writer omitted it the
-                            # caller must not silently get a wrong counter
-                            raise ValueError(
-                                f"{frag.path}: row group {rg} lacks null_count "
-                                f"statistics for column {notnull_col!r}"
-                            )
-            out.append(
-                {"path": rel, "rows": md.num_rows, "min": lo, "max": hi,
-                 "notnull": notnull}
-            )
-        return out
-
-    @staticmethod
-    def file_bounds(data_dir: str, cols: list[str]) -> list[dict]:
-        """Per-FILE min/max bounds of ``cols`` from parquet footers, the
-        Iceberg manifest-entry ``lower_bounds``/``upper_bounds`` analogue
-        (iceberg spec: data_file column bounds used for scan planning).
-        One footer read per file at WRITE time buys metadata-only file
-        skipping on every subsequent pruned read. A column with no usable
-        statistics in some file maps to None — the planner must then keep
-        that file (pruning is only ever a superset guarantee)."""
-        ds = pa_ds.dataset(data_dir, format="parquet", partitioning="hive")
-        out = []
-        for frag in ds.get_fragments():
-            md = frag.metadata
-            schema = md.schema.to_arrow_schema()
-            bounds: dict[str, list | None] = {}
-            for col in cols:
-                idx = schema.get_field_index(col)
-                lo = hi = None
-                if idx >= 0:
-                    for rg in range(md.num_row_groups):
-                        st = md.row_group(rg).column(idx).statistics
-                        if st is None or not st.has_min_max:
-                            lo = hi = None
-                            break  # one stat-less row group poisons the file
-                        smin, smax = _norm_stat(st.min), _norm_stat(st.max)
-                        lo = smin if lo is None else min(lo, smin)
-                        hi = smax if hi is None else max(hi, smax)
-                bounds[col] = None if lo is None else [lo, hi]
-            out.append(
-                {"path": os.path.relpath(frag.path, data_dir), "bounds": bounds}
-            )
-        return out
 
     def plan_pruned(
         self,
@@ -438,37 +401,11 @@ class ParquetWarehouse:
         accelerator: a time- or key-ranged query over an appends-ordered
         table touches only the commits/files whose ranges overlap."""
         plan = self.plan_pruned(table, col, lo, hi, snapshot)
-        out = None
-        for c, keep in plan:
-            d = os.path.join(self.root, c["data_dir"])
-            if not os.path.isdir(d):
-                raise FileNotFoundError(
-                    f"snapshot of {table!r} references expired data dir {d}"
-                )
-            if keep is not None and not keep:
-                continue  # every file in this commit pruned
-            if keep is None:
-                part = (
-                    spark.read.parquet(d)
-                    if c["partition_by"]
-                    else (
-                        spark.read.schema(schema).parquet(d)
-                        if schema is not None
-                        else spark.read.parquet(d)
-                    )
-                )
-            else:
-                files = [os.path.join(d, p) for p in keep]
-                reader = spark.read.option("basePath", d)
-                if schema is not None and not c["partition_by"]:
-                    reader = reader.schema(schema)
-                part = reader.parquet(*files)
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
-        if out is None:
-            base = self.read(spark, table, schema=schema, snapshot=snapshot)
-            out = base.limit(0)
+        cs, keep = [c for c, _ in plan], [k for _, k in plan]
+        if all(k == [] for k in keep):  # every file pruned: empty, same columns
+            out = self._read_commits(spark, table, cs, schema).limit(0)
+        else:
+            out = self._read_commits(spark, table, cs, schema, keep)
         pred = None
         if lo is not None:
             pred = F.col(col) >= F.lit(lo)
@@ -576,12 +513,7 @@ class ParquetWarehouse:
         pruned = [c for c in data["commits"] if c["id"] != commit_id]
         if len(pruned) == len(data["commits"]):
             return
-        tmp = os.path.join(cdir, f".tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump({"id": data["id"], "commits": pruned}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, mpath)
+        _atomic_json(mpath, {"id": data["id"], "commits": pruned})
 
     # -- rewrite ops (compaction / COW merge / snapshot expiry) ----------
     def compact(
@@ -615,7 +547,7 @@ class ParquetWarehouse:
         sort order): repartitionByRange on the keys, then sort within
         each output file — so every file owns a tight, near-disjoint key
         range. Composed with ``stats_cols`` (per-file bounds recorded in
-        the replace commit, see file_bounds), this is what makes
+        the replace commit, see file_stats), this is what makes
         read_pruned effective on a table whose ingest order does NOT
         correlate with the query key: before clustering every file's
         [min,max] spans the whole domain and nothing can be skipped;
@@ -635,39 +567,20 @@ class ParquetWarehouse:
             )
         elif target_partitions is not None:
             df = df.coalesce(target_partitions)
-        token = uuid.uuid4().hex
-        data_dir = os.path.join(self._tdir(table), "data", token)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(data_dir)
+        data_dir = self._write_df(df, table, partition_by)
         rows = self._count_rows(data_dir)
         if rows != expected:
             raise RuntimeError(
                 f"compact aborted: rewrite of {table!r} produced {rows} rows, "
                 f"expected {expected}; old dirs remain live"
             )
-        meta = {
-            "op": "replace",
-            "replaces": [c["id"] for c in cs],
-            "rows_changed": False,
-            "data_dir": os.path.relpath(data_dir, self.root),
-            "rows": rows,
-            "partition_by": partition_by or [],
-            "lineage": {
-                "compaction": {
-                    "commits_before": len(cs),
-                    "rows": rows,
-                    "sort_by": sort_by or [],
-                }
-            },
+        lineage = {
+            "compaction": {"commits_before": len(cs), "rows": rows, "sort_by": sort_by or []}
         }
-        if stats_cols:
-            meta["file_stats"] = {
-                "cols": list(stats_cols),
-                "files": self.file_bounds(data_dir, list(stats_cols)),
-            }
-        return self._write_commit(table, meta)
+        return self._commit(
+            table, data_dir, rows, partition_by, lineage, stats_cols,
+            op="replace", replaces=[c["id"] for c in cs], rows_changed=False,
+        )
 
     def merge_upsert(
         self,
@@ -747,29 +660,19 @@ class ParquetWarehouse:
             F.broadcast(bkeys), keys, "left_anti"
         )
         merged = survivors.unionByName(batch.select(*survivors.columns))
-        token = uuid.uuid4().hex
-        data_dir = os.path.join(self._tdir(table), "data", token)
-        merged.write.mode("overwrite").parquet(data_dir)
+        data_dir = self._write_df(merged, table)
         rows = self._count_rows(data_dir)
-        replaced_rows = sum(c["rows"] for c in affected)
-        return self._write_commit(
-            table,
-            {
-                "op": "replace",
-                "replaces": [c["id"] for c in affected],
-                "rows_changed": True,
-                "data_dir": os.path.relpath(data_dir, self.root),
-                "rows": rows,
-                "partition_by": [],
-                "lineage": {
-                    "merge": {
-                        "keys": keys,
-                        "matched_commits": len(affected),
-                        "replaced_rows": replaced_rows,
-                        "rows_after": rows,
-                    }
-                },
-            },
+        lineage = {
+            "merge": {
+                "keys": keys,
+                "matched_commits": len(affected),
+                "replaced_rows": sum(c["rows"] for c in affected),
+                "rows_after": rows,
+            }
+        }
+        return self._commit(
+            table, data_dir, rows, lineage=lineage,
+            op="replace", replaces=[c["id"] for c in affected], rows_changed=True,
         )
 
     def expire_snapshots(self, table: str, up_to: int) -> list[str]:
@@ -932,10 +835,12 @@ class ParquetWarehouse:
         table: str,
         cs: list[dict],
         schema: StructType | None,
+        keep: list[list[str] | None] | None = None,
     ) -> DataFrame:
         """Read exactly these commits' data dirs (the tail of read(),
-        shared by compact/merge_upsert which resolve their own commit
-        subsets)."""
+        shared by read_pruned/changelog/compact/merge_upsert which resolve
+        their own commit subsets). ``keep``, parallel to ``cs``, narrows a
+        commit to those dir-relative files (None: the whole dir; []: none)."""
         dirs = [os.path.join(self.root, c["data_dir"]) for c in cs]
         missing = [d for d in dirs if not os.path.isdir(d)]
         if missing:
@@ -948,19 +853,24 @@ class ParquetWarehouse:
             if schema is None:
                 raise ValueError(f"table {table!r} empty and no schema given")
             return spark.createDataFrame([], schema=schema)
+        paths = [
+            (d, [d] if k is None else [os.path.join(d, f) for f in k])
+            for d, k in zip(dirs, keep or [None] * len(dirs))
+            if k != []
+        ]
         partitioned = any(c["partition_by"] for c in cs)
         reader = spark.read
         if schema is not None and not partitioned:
             reader = reader.schema(schema)
         if not partitioned:
-            return reader.parquet(*dirs)
+            return reader.parquet(*[p for _, ps in paths for p in ps])
         # hive-partitioned commits: each commit dir is its own partition
         # root — read per-dir and union (a single multi-root read trips
         # Spark's CONFLICTING_DIRECTORY_STRUCTURES discovery)
         out = None
         declared = {f.name: f.dataType for f in schema.fields} if schema is not None else {}
-        for d in dirs:
-            part = spark.read.parquet(d)
+        for d, ps in paths:
+            part = spark.read.option("basePath", d).parquet(*ps)
             if declared:
                 # enforce the caller's declared types on the data columns
                 # (inference must not drift when batch hive-partitioned and
