@@ -288,36 +288,34 @@ def stop_cluster() -> None:
 
 def cluster_session(n_exec: int):
     """SparkSession against the standalone cluster with exactly ``n_exec``
-    2-core executor processes; the engine ships as a --py-files zip."""
-    from pyspark.sql import SparkSession
+    2-core executor processes; the engine ships as a --py-files zip. The
+    engine's own configuration (session._DEFAULTS) applies; only the
+    cluster-shape keys are added here."""
+    from watchman_spark.session import get_spark
 
-    b = (
-        SparkSession.builder.appName(f"watchman-scaling-{n_exec}exec")
-        .master(MASTER_URL)
-        .config("spark.cores.max", str(2 * n_exec))
-        .config("spark.executor.cores", "2")
-        # faithful 2-core-container emulation: on a real cluster each
-        # executor runs in a cgroup and the JVM sizes GC/JIT/netty helper
-        # pools for ITS cores; here every executor JVM sees the host's 32
-        # vCPUs and would size ~23 GC threads EACH — the 1-exec level then
-        # borrows whole-machine helpers (overstating N) while 4 executors
-        # thrash 4x23 GC threads (understating 4N). ActiveProcessorCount
-        # reproduces what the cgroup would tell the JVM.
-        .config("spark.executor.extraJavaOptions", "-XX:ActiveProcessorCount=2")
-        .config("spark.executor.memory", "10g")
-        .config("spark.driver.memory", "8g")
-        .config("spark.submit.pyFiles", PYFILES_ZIP)
-        .config("spark.pyspark.python", sys.executable)
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "32768")
-        .config("spark.local.dir", os.path.join(_fast_dir(), "spark-local"))
-        .config("spark.ui.enabled", "false")
+    s = get_spark(
+        f"watchman-scaling-{n_exec}exec",
+        master=MASTER_URL,
+        extra_conf={
+            "spark.cores.max": str(2 * n_exec),
+            "spark.executor.cores": "2",
+            # faithful 2-core-container emulation: on a real cluster each
+            # executor runs in a cgroup and the JVM sizes GC/JIT/netty
+            # helper pools for ITS cores; here every executor JVM sees all
+            # the host's vCPUs and would size its helper pools for them —
+            # the 1-exec level then borrows whole-machine helpers
+            # (overstating N) while 4 executors thrash 4x as many GC
+            # threads (understating 4N). ActiveProcessorCount reproduces
+            # what the cgroup would tell the JVM.
+            "spark.executor.extraJavaOptions": "-XX:ActiveProcessorCount=2",
+            "spark.executor.memory": "10g",
+            "spark.submit.pyFiles": PYFILES_ZIP,
+            "spark.pyspark.python": sys.executable,
+            "spark.sql.shuffle.partitions": "32",
+            "spark.local.dir": os.path.join(_fast_dir(), "spark-local"),
+            "spark.ui.enabled": "false",
+        },
     )
-    s = b.getOrCreate()
     s.sparkContext.addPyFile(PYFILES_ZIP)
     return s
 

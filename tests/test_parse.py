@@ -80,11 +80,11 @@ def test_patterns_json_roundtrip(base, tmp_path):
     """SURVEY §3.1 step 1: the registry is config-file data. A registry
     serialized to JSON and loaded back is equal and drives the parser
     identically to the code-default one."""
-    from watchman_spark.config import patterns_from_json, patterns_to_json
+    from watchman_spark.config import load_config, patterns_to_json
 
     p = tmp_path / "patterns.json"
     p.write_text(patterns_to_json(DEFAULT_PATTERNS))
-    loaded = patterns_from_json(str(p))
+    loaded, _, _ = load_config(str(p))
     assert loaded == DEFAULT_PATTERNS
     assert parsed_struct(loaded) == parsed_struct(DEFAULT_PATTERNS)
     a = flatten_parsed(with_parsed(base, DEFAULT_PATTERNS, engine="pandas")).orderBy("turn_idx")
@@ -97,7 +97,7 @@ def test_patterns_json_validation(tmp_path):
 
     import pytest as _pytest
 
-    from watchman_spark.config import patterns_from_json
+    from watchman_spark.config import load_config
 
     def write(obj):
         p = tmp_path / "bad.json"
@@ -105,15 +105,15 @@ def test_patterns_json_validation(tmp_path):
         return str(p)
 
     with _pytest.raises(Exception):  # invalid regex fails at LOAD time
-        patterns_from_json(write({"patterns": [{"name": "x", "regex": "(?P<a>["}]}))
+        load_config(write({"patterns": [{"name": "x", "regex": "(?P<a>["}]}))
     with _pytest.raises(ValueError):  # no named groups
-        patterns_from_json(write({"patterns": [{"name": "x", "regex": "abc"}]}))
+        load_config(write({"patterns": [{"name": "x", "regex": "abc"}]}))
     with _pytest.raises(ValueError):  # unsupported type
-        patterns_from_json(
+        load_config(
             write({"patterns": [{"name": "x", "regex": "(?P<a>\\d+)", "types": {"a": "float"}}]})
         )
     with _pytest.raises(ValueError):  # empty registry
-        patterns_from_json(write({"patterns": []}))
+        load_config(write({"patterns": []}))
 
 
 def test_job_run_with_patterns_file(spark, tmp_path):

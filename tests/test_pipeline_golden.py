@@ -149,15 +149,16 @@ def test_routes_json_and_validation(tmp_path):
 
     from watchman_spark.config import (
         DEFAULT_PATTERNS,
+        DEFAULT_ROUTES,
         PipelineConfig,
+        load_config,
         patterns_to_json,
-        routes_from_json,
     )
 
-    # patterns file without routes -> None (caller keeps defaults)
+    # patterns file without routes -> the default routes
     p = tmp_path / "pat.json"
     p.write_text(patterns_to_json(DEFAULT_PATTERNS))
-    assert routes_from_json(str(p)) is None
+    assert load_config(str(p))[1] == DEFAULT_ROUTES
 
     # with routes: parsed + validated
     obj = json.loads(p.read_text())
@@ -167,7 +168,7 @@ def test_routes_json_and_validation(tmp_path):
     ]
     obj["default_sink"] = "rest"
     p.write_text(json.dumps(obj))
-    routes, default = routes_from_json(str(p))
+    _, routes, default = load_config(str(p))
     assert routes[1] == ("audit_trail", "role = 'system'") and default == "rest"
 
     with _pytest.raises(ValueError):  # duplicate sink name

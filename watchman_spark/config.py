@@ -106,27 +106,6 @@ def validate_routes(routes: tuple[tuple[str, str], ...], default_sink: str) -> N
             raise ValueError(f"invalid sink name {n!r} (want [a-z][a-z0-9_]*)")
 
 
-def patterns_from_json(path: str) -> tuple[GrokPattern, ...]:
-    """Load a pattern registry from a JSON config file (SURVEY.md §3.1
-    step 1: patterns are DATA — an operator adds one by editing config, not
-    code). File shape:
-
-        {"patterns": [{"name": "...", "regex": "...",
-                       "types": {"group": "int"}, "prefilter": "..."}]}
-
-    Each regex is validated (compiled, and must declare at least one named
-    group) at LOAD time, so a bad registry fails the job at startup, not
-    mid-run on the executors. The ``parsed`` struct schema is computed from
-    the loaded registry exactly as for the code-default one."""
-    import json as _json
-
-    with open(path) as f:
-        data = _json.load(f)
-    if "patterns" not in data:
-        raise ValueError(f"config {path!r} has no 'patterns' section")
-    return _parse_patterns(data, path)
-
-
 def _parse_patterns(data: dict, path: str) -> tuple[GrokPattern, ...]:
     pats = []
     for p in data["patterns"]:
@@ -146,26 +125,6 @@ def _parse_patterns(data: dict, path: str) -> tuple[GrokPattern, ...]:
     if not pats:
         raise ValueError(f"pattern registry {path!r} is empty")
     return tuple(pats)
-
-
-def routes_from_json(path: str) -> tuple[tuple[tuple[str, str], ...], str] | None:
-    """Optional routing section of the same JSON config file:
-
-        {"routes": [{"sink": "errors", "when": "parsed.error_code IS NOT NULL"},
-                    ...],
-         "default_sink": "conversational"}
-
-    Returns (routes, default_sink), or None when the file has no "routes"
-    key (callers then keep DEFAULT_ROUTES). Sink names and rule shape are
-    validated at load time; each "when" SQL condition is parsed (and its
-    columns resolved) when the routing CASE chain is analyzed at plan-setup
-    — still BEFORE any read or write runs (Spark analyzes withColumn
-    eagerly), so a bad condition fails the job at startup."""
-    import json as _json
-
-    with open(path) as f:
-        data = _json.load(f)
-    return _parse_routes(data)
 
 
 def _parse_routes(data: dict) -> tuple[tuple[tuple[str, str], ...], str] | None:
@@ -190,7 +149,23 @@ def load_config(
     """One-read loader for the full JSON config: (patterns, routes,
     default_sink), each section optional and independently defaulted —
     a routes-only file keeps the built-in pattern registry and vice
-    versa."""
+    versa. Patterns and routes are DATA (SURVEY.md §3.1 step 1): an
+    operator adds one by editing config, not code. File shape:
+
+        {"patterns": [{"name": "...", "regex": "...",
+                       "types": {"group": "int"}, "prefilter": "..."}],
+         "routes": [{"sink": "errors", "when": "parsed.error_code IS NOT NULL"},
+                    ...],
+         "default_sink": "conversational"}
+
+    Everything is validated at LOAD time, so a bad config fails the job at
+    startup, not mid-run on the executors: each regex compiles and
+    declares at least one named group, group types are int or string,
+    sink names and rule shape are checked. Each "when" SQL condition is
+    parsed (and its columns resolved) when the routing CASE chain is
+    analyzed at plan setup — still before any read or write runs. The
+    ``parsed`` struct schema is computed from the loaded registry exactly
+    as for the code-default one."""
     import json as _json
 
     with open(path) as f:
@@ -202,7 +177,7 @@ def load_config(
 
 def patterns_to_json(patterns: tuple[GrokPattern, ...]) -> str:
     """Serialize a registry to the JSON config shape (round-trip with
-    patterns_from_json — tested in tests/test_parse.py)."""
+    load_config — tested in tests/test_parse.py)."""
     import json as _json
 
     return _json.dumps(

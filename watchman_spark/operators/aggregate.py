@@ -11,7 +11,10 @@ the one hand-rolled optimization in the engine:
 
 Results are bit-identical to the naive single-stage group-by for the
 decomposable aggregates supported here (count/sum/min/max and avg as
-sum/count) — property-tested in tests/test_props.py.
+sum/count) — property-tested in tests/test_props.py. The pipeline's own
+conv/role/tool rollup needs no salt: it reads the bucket-partitioned
+staged tree, whose map-side combine already splits a hot conv_id
+(plans/pipeline.py).
 """
 
 from __future__ import annotations
@@ -71,33 +74,4 @@ def per_sink_counts(routed: DataFrame) -> DataFrame:
     return routed.groupBy("sink").agg(
         F.count(F.lit(1)).alias("n"),
         F.countDistinct("conv_id").alias("distinct_convs"),
-    )
-
-
-def conv_role_tool_rollup(routed: DataFrame, salt_n: int = 16) -> DataFrame:
-    """agg_conv_role_tool(conv_id, role, tool, n, sum_latency_ms, max_err_ms).
-
-    Salted: conv_id is zipfian-hot (FIXTURES.md §1 skew), and this group-by
-    keys on it directly — exactly the case AQE cannot split. Accepts either
-    the struct form (``parsed`` column) or the flattened sink-table form.
-    """
-    if "parsed" in routed.columns:
-        lat = F.col("parsed.latency_ms")
-        err = F.col("parsed.err_ms")
-    else:
-        lat = F.col("latency_ms")
-        err = F.col("err_ms")
-    flat = routed.select(
-        "conv_id", "role", "tool", "turn_idx", lat.alias("__lat"), err.alias("__err")
-    )
-    return salted_agg(
-        flat,
-        keys=["conv_id", "role", "tool"],
-        aggs=[
-            ("count", None, "n"),
-            ("sum", "__lat", "sum_latency_ms"),
-            ("max", "__err", "max_err_ms"),
-        ],
-        salt_n=salt_n,
-        salt_cols=["conv_id", "turn_idx"],
     )

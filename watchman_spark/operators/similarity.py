@@ -14,7 +14,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -51,6 +51,32 @@ def cosine_staged(a: Column, b: Column, a_norm: Column, b_norm: Column) -> Colum
     return dot(a, b) / (a_norm * b_norm)
 
 
+def _scored(
+    base: DataFrame, q: DataFrame, key: str, id_col: str, keep: list[str]
+) -> DataFrame:
+    """Candidates of a keyed vector search: the corpus side (id, v, key,
+    __vn) joined on ``key`` with the query side (keep..., q, key, __qn),
+    projected to (keep..., id, cos_sim) with cos_sim rounded to 4 dp."""
+    return base.join(q, key).select(
+        *keep,
+        F.col(id_col),
+        F.round(
+            cosine_staged(F.col("v"), F.col("q"), F.col("__vn"), F.col("__qn")), 4
+        ).alias("cos_sim"),
+    )
+
+
+def _topk(cand: DataFrame, id_col: str, k: int) -> DataFrame:
+    """The k best candidates overall (ties broken by id)."""
+    return cand.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
+
+
+def _ranked(cand: DataFrame, query_id_col: str, id_col: str, k: int) -> DataFrame:
+    """The k best candidates per query, with their 1-based ``rank``."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
+    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def brute_force_topk(
     df: DataFrame,
     query_vec: Column | DataFrame,
@@ -70,43 +96,16 @@ def brute_force_topk(
         scored = base.withColumn("q", query_vec).withColumn(
             "__qn", l2norm(F.col("q"))
         )
-    return (
-        scored.select(
-            F.col(id_col),
-            F.round(
-                cosine_staged(
-                    F.col("v"), F.col("q"), l2norm(F.col("v")), F.col("__qn")
-                ),
-                4,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
+    cand = scored.select(
+        F.col(id_col),
+        F.round(
+            cosine_staged(
+                F.col("v"), F.col("q"), l2norm(F.col("v")), F.col("__qn")
+            ),
+            4,
+        ).alias("cos_sim"),
     )
-
-
-def quantize_vec(vec: Column) -> tuple[Column, Column]:
-    """Symmetric per-vector int8 scalar quantization: q_i =
-    round(x_i * 127 / max|x|) ∈ [-127, 127], plus the dequant scale
-    max|x| / 127. Returns (q_array<int>, scale_double); an all-zero vector
-    quantizes to zeros with scale 0.
-
-    Why at 100 TB: int8 cuts the bytes an ANN scan/shuffle moves per
-    vector 4× (the brute-force and IVF-probe phases are memory-bandwidth
-    bound, not FLOP bound), and COSINE is scale-invariant, so ranking by
-    the quantized cosine needs no dequantization at all — scales cancel.
-    Everything stays JVM-side (higher-order functions), and the
-    arithmetic is engine-portable: products of ints ≤127² summed over any
-    realistic dim stay exact in doubles, so the fold order can't diverge
-    between engines."""
-    v = as_double(vec)
-    maxabs = F.array_max(F.transform(v, F.abs))
-    q = F.when(
-        maxabs == 0.0, F.transform(v, lambda x: F.lit(0))
-    ).otherwise(
-        F.transform(v, lambda x: F.round(x * 127.0 / maxabs).cast("int"))
-    )
-    return q, maxabs / 127.0
+    return _topk(cand, id_col, k)
 
 
 def quantize_embeddings(
@@ -115,14 +114,18 @@ def quantize_embeddings(
     out_col: str = "q",
     scale_col: str = "q_scale",
 ) -> DataFrame:
-    """Append int8-quantized vectors + dequant scales (see quantize_vec).
+    """Append int8-quantized vectors + dequant scales: symmetric
+    per-vector scalar quantization q_i = round(x_i * 127 / max|x|) in
+    [-127, 127], scale max|x| / 127 (an all-zero vector quantizes to zeros
+    with scale 0). Cosine is scale-invariant, so ranking by the cosine of
+    the quantized arrays needs no dequantization: the scales cancel.
 
-    r6: maxabs is materialized as its own projection step BEFORE the
-    per-element transform references it. The single-Column quantize_vec
-    form inlines the whole array_max(transform(v, abs)) subtree into every
-    element's lambda — O(dim²) work per row (measured ~8s for 20k×64-dim
-    vectors at sf1.0; Catalyst does not common-subexpression-eliminate
-    inside higher-order-function lambdas). Same arithmetic, same values.
+    maxabs is materialized as its own projection BEFORE the per-element
+    transform references it. Inlined, the whole array_max(transform(v,
+    abs)) subtree would be re-evaluated inside every element's lambda —
+    O(dim²) work per row (measured ~8s for 20k×64-dim vectors at sf1.0;
+    Catalyst does not common-subexpression-eliminate inside
+    higher-order-function lambdas).
     """
     maxabs = F.array_max(F.transform(as_double(F.col(vec_col)), F.abs))
     with_max = df.withColumn("__maxabs", maxabs)
@@ -152,49 +155,14 @@ def brute_force_topk_quantized(
     """brute_force_topk over int8-quantized vectors: rank by the cosine of
     the QUANTIZED arrays (scale-invariant, no dequant). Same plan shape as
     the float path — broadcast 1-row query, TakeOrderedAndProject — at a
-    quarter of the scan bytes once the corpus is stored quantized."""
-    # r6: quantize via the column-materialized path (one maxabs per row,
-    # not per element — see quantize_embeddings) and stage the double
-    # arrays + the corpus-side norm as their own projections so the cosine
-    # does not re-derive the quantized array 4× per row. Same expression
-    # arithmetic; same values.
-    base = quantize_embeddings(df, vec_col=vec_col).select(
-        F.col(id_col), F.col("q").alias("v")
-    )
+    quarter of the scan bytes once the corpus is stored quantized.
+    ``query_vec`` holds an already-quantized (int) query array."""
+    base = quantize_embeddings(df, vec_col=vec_col).select(F.col(id_col), F.col("q"))
     if isinstance(query_vec, DataFrame):
-        # stage the query's double array AND its norm on the 1-row side
-        # (computed once, not once per corpus row — cosine_staged)
-        qd = query_vec.select(
-            F.transform(F.col("q"), lambda x: x.cast("double")).alias("__qd")
-        ).withColumn("__qn", l2norm(F.col("__qd")))
-        scored = base.crossJoin(F.broadcast(qd))
+        query_vec = query_vec.select(as_double(F.col("q")).alias("q"))
     else:
-        scored = (
-            base.withColumn("q", query_vec)
-            .withColumn(
-                "__qd", F.transform(F.col("q"), lambda x: x.cast("double"))
-            )
-            .withColumn("__qn", l2norm(F.col("__qd")))
-        )
-    staged = scored.select(
-        F.col(id_col),
-        F.transform(F.col("v"), lambda x: x.cast("double")).alias("__vd"),
-        F.col("__qd"),
-        F.col("__qn"),
-    )
-    return (
-        staged.select(
-            F.col(id_col),
-            F.round(
-                cosine_staged(
-                    F.col("__vd"), F.col("__qd"), l2norm(F.col("__vd")), F.col("__qn")
-                ),
-                4,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+        query_vec = as_double(query_vec)
+    return brute_force_topk(base, query_vec, id_col=id_col, vec_col="q", k=k)
 
 
 def cosine_pairs_blocked(
@@ -302,6 +270,36 @@ def _probe_explode(q: DataFrame, keep_cols: list[str], masks: list[int]) -> Data
     )
 
 
+def _lsh_sides(
+    corpus: DataFrame,
+    queries: DataFrame,
+    dim: int,
+    id_col: str,
+    vec_col: str,
+    query_vec_col: str,
+    keep: list[str],
+    n_planes: int,
+    probes: int,
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides of an LSH search keyed by ``bucket``: the corpus (id, v,
+    bucket, __vn) and the queries (keep..., q, bucket, __qn), expanded to
+    their probe buckets. Norms are staged once per row, not per candidate."""
+    base = (
+        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
+        .withColumn("bucket", lsh_bucket(F.col("v"), dim, n_planes))
+        .withColumn("__vn", l2norm(F.col("v")))
+    )
+    q = (
+        queries.select(*keep, as_double(F.col(query_vec_col)).alias("q"))
+        .withColumn("bucket", lsh_bucket(F.col("q"), dim, n_planes))
+        .withColumn("__qn", l2norm(F.col("q")))
+    )
+    masks = _probe_masks(n_planes, probes)
+    if masks:
+        q = _probe_explode(q, [*keep, "q", "__qn"], masks)
+    return base, q
+
+
 def lsh_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -323,31 +321,8 @@ def lsh_topk(
     planes), broadcast to the corpus-side join, so candidate generation
     stays one map-side hash join regardless of corpus size. Radii outside
     [0, n_planes] raise (they used to silently probe radius 1)."""
-    base = (
-        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("bucket", lsh_bucket(F.col("v"), dim, n_planes))
-        .withColumn("__vn", l2norm(F.col("v")))  # once per row, not per candidate
-    )
-    q = (
-        query_df.select(as_double(F.col("q")).alias("q"))
-        .withColumn("bucket", lsh_bucket(F.col("q"), dim, n_planes))
-        .withColumn("__qn", l2norm(F.col("q")))
-    )
-    masks = _probe_masks(n_planes, probes)
-    if masks:
-        q = _probe_explode(q, ["q", "__qn"], masks)
-    return (
-        base.join(F.broadcast(q), "bucket")
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine_staged(F.col("v"), F.col("q"), F.col("__vn"), F.col("__qn")),
-                4,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    base, q = _lsh_sides(df, query_df, dim, id_col, vec_col, "q", [], n_planes, probes)
+    return _topk(_scored(base, F.broadcast(q), "bucket", id_col, []), id_col, k)
 
 
 def knn_join_lsh(
@@ -379,30 +354,43 @@ def knn_join_lsh(
     Raise n_planes as the corpus grows (2^n_planes buckets is the shuffle
     key space; 16 planes → 65k keys keeps partitions balanced at 100 TB —
     at small n_planes the handful of hot buckets is the skew risk)."""
-    from pyspark.sql import Window
-
-    base = (
-        corpus.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("bucket", lsh_bucket(F.col("v"), dim, n_planes))
-        .withColumn("__vn", l2norm(F.col("v")))  # once per row, not per candidate
+    base, q = _lsh_sides(
+        corpus, queries, dim, id_col, vec_col, query_vec_col, [query_id_col],
+        n_planes, probes,
     )
+    cand = _scored(base, q, "bucket", id_col, [query_id_col])
+    return _ranked(cand, query_id_col, id_col, k)
+
+
+def _ivf_sides(
+    corpus: DataFrame,
+    queries: DataFrame,
+    n_centroids: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    query_vec_col: str,
+    keep: list[str],
+    train_iters: int,
+    centroids: list[list[float]] | None,
+    assigned: DataFrame | None,
+) -> tuple[DataFrame, DataFrame]:
+    """Both sides of an IVF search keyed by ``centroid``: the assigned
+    corpus (id, v, centroid, __vn) and the queries (keep..., q, centroid,
+    __qn), one row per probed centroid. The index is ``centroids`` when
+    given, else trained here (train_iters=0 gives the seed picks)."""
+    cents = centroids if centroids is not None else ivf_train(
+        corpus, n_centroids, train_iters, id_col, vec_col
+    )
+    if assigned is None:
+        assigned = ivf_assign(corpus, cents, id_col, vec_col)
+    probe = _assign_udf(cents, nprobe=nprobe)
     q = (
-        queries.select(F.col(query_id_col), as_double(F.col(query_vec_col)).alias("q"))
-        .withColumn("bucket", lsh_bucket(F.col("q"), dim, n_planes))
+        queries.select(*keep, as_double(F.col(query_vec_col)).alias("q"))
+        .withColumn("centroid", F.explode(probe(F.col("q"))))
         .withColumn("__qn", l2norm(F.col("q")))
     )
-    masks = _probe_masks(n_planes, probes)
-    if masks:
-        q = _probe_explode(q, [query_id_col, "q", "__qn"], masks)
-    cand = base.join(q, "bucket").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_staged(F.col("v"), F.col("q"), F.col("__vn"), F.col("__qn")), 4
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return assigned.withColumn("__vn", l2norm(F.col("v"))), q
 
 
 def knn_join_ivf(
@@ -427,31 +415,12 @@ def knn_join_ivf(
     ``assigned`` (the (id, v, centroid) table ivf_index_build persists) to
     skip the corpus assignment pass entirely — the search job then touches
     only the probed buckets' rows."""
-    from pyspark.sql import Window
-
-    if centroids is not None:
-        cents = centroids
-    elif train_iters > 0:
-        cents = ivf_train(corpus, n_centroids, train_iters, id_col, vec_col)
-    else:
-        cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
-    if assigned is None:
-        assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    probe = _assign_udf(cents, nprobe=nprobe)
-    q = (
-        queries.select(F.col(query_id_col), as_double(F.col(query_vec_col)).alias("q"))
-        .withColumn("centroid", F.explode(probe(F.col("q"))))
-        .withColumn("__qn", l2norm(F.col("q")))
+    base, q = _ivf_sides(
+        corpus, queries, n_centroids, nprobe, id_col, vec_col, query_vec_col,
+        [query_id_col], train_iters, centroids, assigned,
     )
-    cand = assigned.withColumn("__vn", l2norm(F.col("v"))).join(q, "centroid").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(
-            cosine_staged(F.col("v"), F.col("q"), F.col("__vn"), F.col("__qn")), 4
-        ).alias("cos_sim"),
-    )
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    cand = _scored(base, q, "centroid", id_col, [query_id_col])
+    return _ranked(cand, query_id_col, id_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -503,7 +472,8 @@ def ivf_train(
     order with zip_with (JVM sequential fold), then rounds the mean to
     9 dp — no dependence on shuffle arrival order. Old-path equality at
     test scale is asserted in tests/test_similarity.py. Empty clusters
-    keep their previous centroid (k never degenerates)."""
+    keep their previous centroid (k never degenerates). iters=0 returns
+    the seed picks of ivf_centroids."""
     cents = ivf_centroids(df, n_centroids, id_col, vec_col)
     base = df.select(as_double(F.col(vec_col)).alias("v"))
     for _ in range(iters):
@@ -655,10 +625,7 @@ def ivf_index_build(
     the on-disk analogue of the broadcast probe join)."""
     import pyarrow as pa
 
-    if train_iters > 0:
-        cents = ivf_train(corpus, n_centroids, train_iters, id_col, vec_col)
-    else:
-        cents = ivf_centroids(corpus, n_centroids, id_col, vec_col)
+    cents = ivf_train(corpus, n_centroids, train_iters, id_col, vec_col)
     lineage = {
         "index": name,
         "n_centroids": n_centroids,
@@ -744,30 +711,8 @@ def ivf_topk(
     Pass ``centroids`` (and optionally the persisted ``assigned`` table)
     to reuse a prebuilt index — build once with ivf_index_build, search
     many across sessions without retraining or re-assigning."""
-    if centroids is not None:
-        cents = centroids
-    elif train_iters > 0:
-        cents = ivf_train(df, n_centroids, train_iters, id_col, vec_col)
-    else:
-        cents = ivf_centroids(df, n_centroids, id_col, vec_col)
-    if assigned is None:
-        assigned = ivf_assign(df, cents, id_col, vec_col)
-    probe = _assign_udf(cents, nprobe=nprobe)
-    q = (
-        query_df.select(as_double(F.col("q")).alias("q"))
-        .withColumn("centroid", F.explode(probe(F.col("q"))))
-        .withColumn("__qn", l2norm(F.col("q")))
+    base, q = _ivf_sides(
+        df, query_df, n_centroids, nprobe, id_col, vec_col, "q", [], train_iters,
+        centroids, assigned,
     )
-    return (
-        assigned.withColumn("__vn", l2norm(F.col("v")))
-        .join(F.broadcast(q), "centroid")
-        .select(
-            F.col(id_col),
-            F.round(
-                cosine_staged(F.col("v"), F.col("q"), F.col("__vn"), F.col("__qn")),
-                4,
-            ).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
+    return _topk(_scored(base, F.broadcast(q), "centroid", id_col, []), id_col, k)

@@ -8,7 +8,8 @@ derived purely from the driver's events table, cached per sf_dir."""
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+import shutil
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 
@@ -18,25 +19,32 @@ from .queries import register, t
 from .sources.warehouse import ParquetWarehouse
 
 
-def _wh(spark, sf_dir: str) -> ParquetWarehouse:
-    import shutil
-
+def _cached_wh(
+    sf_dir: str, name: str, build: Callable[[ParquetWarehouse], None]
+) -> ParquetWarehouse:
+    """The warehouse at /tmp/<name>_<sf_dir tag>, filled by ``build(wh)``
+    on first use. The completion marker, not commits() presence, marks a
+    build complete: a crash mid-build leaves no marker, so the next call
+    rebuilds from scratch instead of serving a half-built cache."""
     tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/tmp/watchman_whq_{tag}"
-    wh = ParquetWarehouse(root)
+    root = f"/tmp/{name}_{tag}"
     done = os.path.join(root, "_build_done")
     if not os.path.exists(done):
-        # completion marker, not commits() presence: a crash between the
-        # two appends must not leave a half-built cache behind
         shutil.rmtree(root, ignore_errors=True)
-        wh = ParquetWarehouse(root)
+        build(ParquetWarehouse(root))
+        with open(done, "w") as f:
+            f.write("ok")
+    return ParquetWarehouse(root)
+
+
+def _wh(spark, sf_dir: str) -> ParquetWarehouse:
+    def build(wh):
         ev = t(spark, sf_dir, "events")
         # two commits: even event_ids, then odd — snapshot 1 sees half
         wh.write_append(ev.filter(F.col("event_id") % 2 == 0), "events_snap")
         wh.write_append(ev.filter(F.col("event_id") % 2 == 1), "events_snap")
-        with open(done, "w") as f:
-            f.write("ok")
-    return wh
+
+    return _cached_wh(sf_dir, "watchman_whq", build)
 
 
 @register(
@@ -79,18 +87,8 @@ def _wh_cow(spark, sf_dir: str) -> ParquetWarehouse:
     event_id % 7 == 0 rows (commit 5). Every downstream read is therefore
     derivable from the source events table in pure SQL — which is what
     makes replace-commit semantics driver-oracled, not just pytest-ed."""
-    import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/tmp/watchman_whq_cow_{tag}"
-    wh = ParquetWarehouse(root)
-    done = os.path.join(root, "_build_done")
-    if not os.path.exists(done):
-        # a crash mid-build would otherwise leave a half-built warehouse
-        # that the commits()-presence guard wrongly treats as complete —
-        # rebuild from scratch unless the completion marker exists
-        shutil.rmtree(root, ignore_errors=True)
-        wh = ParquetWarehouse(root)
+    def build(wh):
         ev = t(spark, sf_dir, "events").select("event_id", "event_type")
         for m in range(3):
             wh.write_append(ev.filter(F.col("event_id") % 3 == m), "events_cow")
@@ -99,9 +97,8 @@ def _wh_cow(spark, sf_dir: str) -> ParquetWarehouse:
             "event_type", F.lit("corrected")
         )
         wh.merge_upsert(spark, "events_cow", batch, ["event_id"])
-        with open(done, "w") as f:
-            f.write("ok")
-    return wh
+
+    return _cached_wh(sf_dir, "watchman_whq_cow", build)
 
 
 @register(
@@ -166,17 +163,8 @@ def _wh_stats(spark, sf_dir: str) -> ParquetWarehouse:
     tests/test_pruning.py::test_registry_warehouse_prunes_commits — while
     the result stays row-identical to a plain filtered scan (the oracle
     below)."""
-    import shutil
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    root = f"/tmp/watchman_whq_stats_{tag}"
-    wh = ParquetWarehouse(root)
-    done = os.path.join(root, "_build_done")
-    if not os.path.exists(done):
-        # completion marker: a crash mid-build must not leave a partial
-        # warehouse that later calls mistake for complete
-        shutil.rmtree(root, ignore_errors=True)
-        wh = ParquetWarehouse(root)
+    def build(wh):
         ev = t(spark, sf_dir, "events")
         for etype in ["click", "error", "purchase", "signup", "view"]:
             wh.write_append(
@@ -184,9 +172,8 @@ def _wh_stats(spark, sf_dir: str) -> ParquetWarehouse:
                 "events_stats",
                 stats_cols=["event_type", "ts"],
             )
-        with open(done, "w") as f:
-            f.write("ok")
-    return wh
+
+    return _cached_wh(sf_dir, "watchman_whq_stats", build)
 
 
 @register(

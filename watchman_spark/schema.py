@@ -2,8 +2,9 @@
 
 The input transcript schema is pinned by BASELINE.json:15 (`input_hint`):
 (conv_id:string, turn_idx:int32, role:string, text:string, tool:string,
-ts:timestamp). The parsed struct mirrors the grok pattern registry
-(FIXTURES.md §1); sink schemas are input + flattened captures + sink tag.
+ts:timestamp). The parsed capture struct is built from the pattern
+registry (``config.parsed_struct``); the ledger's schema lives with the
+ledger (``checkpoint.ledger_arrow``).
 """
 
 from __future__ import annotations
@@ -11,7 +12,6 @@ from __future__ import annotations
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
-    LongType,
     StringType,
     StructField,
     StructType,
@@ -26,21 +26,6 @@ TRANSCRIPT_SCHEMA = StructType(
         StructField("text", StringType(), True),
         StructField("tool", StringType(), True),
         StructField("ts", TimestampType(), False),
-    ]
-)
-
-# Grok capture struct — one field per named group across the registry
-# (FIXTURES.md §1 "Grok patterns"). Computed from the pattern registry at
-# session start in config.py; this constant is the default-registry result.
-PARSED_SCHEMA = StructType(
-    [
-        StructField("tool_name", StringType(), True),
-        StructField("args_n", IntegerType(), True),
-        StructField("latency_ms", IntegerType(), True),
-        StructField("status", StringType(), True),
-        StructField("error_code", StringType(), True),
-        StructField("error_msg", StringType(), True),
-        StructField("err_ms", IntegerType(), True),
     ]
 )
 
@@ -60,24 +45,5 @@ TOOL_DIM_SCHEMA = StructType(
     ]
 )
 
-LEDGER_SCHEMA = StructType(
-    [
-        StructField("run_id", StringType(), False),
-        StructField("bucket", IntegerType(), False),
-        StructField("rows", LongType(), False),
-        StructField("min_conv", StringType(), True),
-        StructField("max_conv", StringType(), True),
-        StructField("wall_ms", LongType(), False),
-        StructField("committed_at", TimestampType(), False),
-    ]
-)
-
 SINKS = ("errors", "tool_calls", "conversational")
 
-
-def routed_schema() -> StructType:
-    """Schema of routed (sink) rows: input + flattened parsed + sink tag."""
-    fields = list(TRANSCRIPT_SCHEMA.fields)
-    fields += [StructField(f.name, f.dataType, True) for f in PARSED_SCHEMA.fields]
-    fields.append(StructField("sink", StringType(), False))
-    return StructType(fields)

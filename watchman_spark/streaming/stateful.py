@@ -24,13 +24,13 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "total long, convs_seen long, first_ts timestamp, last_ts timestamp"
 
 
-def _update(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    (sink,) = key
-    total, convs_seen, first_ts, last_ts = (
-        state.get if state.exists else (0, 0, None, None)
-    )
+def _fold(
+    sink: str, prev: tuple | None, pdfs: Iterable[pd.DataFrame]
+) -> tuple[tuple, pd.DataFrame]:
+    """Fold one micro-batch of a sink's rows into its counters. ``prev``
+    is the stored (total, convs_seen, first_ts, last_ts) or None; returns
+    the new state and the one-row output frame."""
+    total, convs_seen, first_ts, last_ts = prev if prev is not None else (0, 0, None, None)
     batch_rows = 0
     convs = set()
     for pdf in pdfs:
@@ -45,8 +45,7 @@ def _update(
     # dropDuplicates operator upstream; at scale you'd keep an HLL sketch
     # in the state blob instead)
     convs_seen += len(convs)
-    state.update((total, convs_seen, first_ts, last_ts))
-    yield pd.DataFrame(
+    row = pd.DataFrame(
         {
             "sink": [sink],
             "total": [total],
@@ -56,6 +55,15 @@ def _update(
             "last_ts": [last_ts],
         }
     )
+    return (total, convs_seen, first_ts, last_ts), row
+
+
+def _update(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    new, row = _fold(key[0], state.get if state.exists else None, pdfs)
+    state.update(new)
+    yield row
 
 
 def running_sink_counters(tagged: DataFrame) -> DataFrame:
@@ -102,30 +110,10 @@ def make_sink_counter_processor():
             self.totals = handle.getValueState("totals", STATE_SCHEMA)
 
         def handleInputRows(self, key, rows, timer_values):
-            total, convs_seen, first_ts, last_ts = (
-                self.totals.get() if self.totals.exists() else (0, 0, None, None)
-            )
-            batch_rows = 0
-            convs = set()
-            for pdf in rows:
-                batch_rows += len(pdf)
-                convs.update(pdf["conv_id"])
-                lo, hi = pdf["ts"].min(), pdf["ts"].max()
-                first_ts = lo if first_ts is None else min(first_ts, lo)
-                last_ts = hi if last_ts is None else max(last_ts, hi)
-            total += batch_rows
-            convs_seen += len(convs)  # same per-batch upper bound as _update
-            self.totals.update((total, convs_seen, first_ts, last_ts))
-            yield pd.DataFrame(
-                {
-                    "sink": [key[0]],
-                    "total": [total],
-                    "batch_rows": [batch_rows],
-                    "convs_seen": [convs_seen],
-                    "first_ts": [first_ts],
-                    "last_ts": [last_ts],
-                }
-            )
+            prev = self.totals.get() if self.totals.exists() else None
+            new, row = _fold(key[0], prev, rows)
+            self.totals.update(new)
+            yield row
 
         def close(self) -> None:
             pass

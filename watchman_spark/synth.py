@@ -2,9 +2,10 @@
 
 Implements FIXTURES.md §1-3: a pure function of (seed, n_convs, C, hot_cap)
 producing the transcript table of BASELINE.json:15 shape with zipfian
-hot-conversation skew (BASELINE.json:6), plus the role/tool dimensions and a
-``golden.json`` of analytically-known outputs (total rows, per-sink counts,
-per-role counts, distinct convs, per-conversation text digests).
+hot-conversation skew (BASELINE.json:6), plus the role/tool dimensions and
+the analytically-known golden outputs of ``compute_golden`` (total rows,
+per-sink counts, per-role counts, distinct convs, per-conversation text
+digests).
 
 Determinism: every field derives from ``stable_hash`` = first 8 bytes of
 sha256 over the UTF-8 key (FIXTURES.md §1) — never Python ``hash()``, no
@@ -19,8 +20,6 @@ per-turn code on the driver and is only used at test scale.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 from dataclasses import dataclass
 
 import pandas as pd
@@ -239,20 +238,3 @@ def compute_golden(params: SynthParams, digest_sample: int = 50) -> dict:
         "conv_digests": digests,
     }
 
-
-def write_fixture(
-    spark: SparkSession, outdir: str, params: SynthParams, golden: bool = True
-) -> dict | None:
-    """Materialize transcripts + dims (+ golden.json) under ``outdir``."""
-    os.makedirs(outdir, exist_ok=True)
-    synth_transcripts(spark, params).write.mode("overwrite").parquet(
-        os.path.join(outdir, "transcripts.parquet")
-    )
-    role_dim(spark).write.mode("overwrite").parquet(os.path.join(outdir, "role_dim.parquet"))
-    tool_dim(spark).write.mode("overwrite").parquet(os.path.join(outdir, "tool_dim.parquet"))
-    g = None
-    if golden:
-        g = compute_golden(params)
-        with open(os.path.join(outdir, "golden.json"), "w") as f:
-            json.dump(g, f, indent=1, sort_keys=True)
-    return g
