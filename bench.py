@@ -191,6 +191,8 @@ def run_parse_route_only(spark, path: str) -> tuple[int, float]:
 
 MASTER_URL = "spark://127.0.0.1:7077"
 PYFILES_ZIP = "/tmp/watchman_spark_pyfiles.zip"
+CLUSTER_LOG_DIR = "/tmp/spark-logs"
+_CLUSTER_PROCS: list = []  # Popen handles of the daemons ensure_cluster started
 
 
 def _spark_home() -> str:
@@ -246,17 +248,16 @@ def ensure_cluster(n_workers: int = 4, cores: int = 2, mem: str = "12g") -> None
     import time as _t
 
     home = _spark_home()
-    logdir = "/tmp/spark-logs"
-    os.makedirs(logdir, exist_ok=True)
+    os.makedirs(CLUSTER_LOG_DIR, exist_ok=True)
     env = {**os.environ, "SPARK_HOME": home}
     cls = os.path.join(home, "bin", "spark-class")
     if not _port_open(7077):
-        with open(os.path.join(logdir, "master.log"), "ab") as log:
-            subprocess.Popen(
+        with open(os.path.join(CLUSTER_LOG_DIR, "master.log"), "ab") as log:
+            _CLUSTER_PROCS.append(subprocess.Popen(
                 [cls, "org.apache.spark.deploy.master.Master",
                  "-h", "127.0.0.1", "-p", "7077", "--webui-port", "8089"],
                 stdout=log, stderr=subprocess.STDOUT, env=env,
-            )
+            ))
         for _ in range(60):
             if _port_open(7077):
                 break
@@ -265,13 +266,13 @@ def ensure_cluster(n_workers: int = 4, cores: int = 2, mem: str = "12g") -> None
             raise RuntimeError("standalone master did not start on :7077")
     missing = n_workers - _alive_workers()
     for i in range(missing):
-        with open(os.path.join(logdir, f"worker-{i}.log"), "ab") as log:
-            subprocess.Popen(
+        with open(os.path.join(CLUSTER_LOG_DIR, f"worker-{i}.log"), "ab") as log:
+            _CLUSTER_PROCS.append(subprocess.Popen(
                 [cls, "org.apache.spark.deploy.worker.Worker", MASTER_URL,
                  "-h", "127.0.0.1", "-c", str(cores), "-m", mem,
                  "--webui-port", "0", "--work-dir", f"/tmp/spark-work-{i}-{os.getpid()}"],
                 stdout=log, stderr=subprocess.STDOUT, env=env,
-            )
+            ))
     for _ in range(60):
         if _alive_workers() >= n_workers:
             return
@@ -280,8 +281,19 @@ def ensure_cluster(n_workers: int = 4, cores: int = 2, mem: str = "12g") -> None
 
 
 def stop_cluster() -> None:
+    """Terminate and reap the daemons this process started (an unreaped
+    child stays <defunct>), then pkill any an earlier driver left."""
     import subprocess
 
+    for p in _CLUSTER_PROCS:
+        p.terminate()
+    for p in _CLUSTER_PROCS:
+        try:
+            p.wait(timeout=30)
+        except subprocess.TimeoutExpired:
+            p.kill()
+            p.wait()
+    _CLUSTER_PROCS.clear()
     subprocess.run(["pkill", "-f", "org.apache.spark.deploy.worker.Worker"], check=False)
     subprocess.run(["pkill", "-f", "org.apache.spark.deploy.master.Master"], check=False)
 

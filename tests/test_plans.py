@@ -441,6 +441,19 @@ def test_ingest_neardup_candidate_join_linear(spark):
         assert "BroadcastNestedLoopJoin" not in plan
 
 
+@pytest.mark.parametrize(
+    "name",
+    ["dedup_minhash_lsh", "dedup_minhash_lsh_portable", "dedup_simhash",
+     "dedup_ngram_jaccard"],
+)
+def test_candidate_self_join_is_equi_join(spark, name):
+    # every dedup candidate generator is a bucket-key equi-join (a.id < b.id
+    # is only an extra condition), never a cartesian or nested loop
+    plan = plan_of(spark, name)
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_log_templates_single_exchange_partial_agg(spark):
     # masking is map-side JVM regex (a Project directly over the scan);
     # the exact n_users distinct expands to Spark's standard two-level

@@ -416,3 +416,24 @@ def test_ingest_batch_crash_between_appends_reconciles(spark, tmp_path_factory):
     out3 = ingest_batch(spark, wh, batch, 0, "r", k=3, threshold=0.5)
     assert out3 == {"appended": 0, "dropped": 0, "reconciled": False}
     assert wh.table_rows("corpus") == 2 and wh.table_rows("corpus_sig_ledger") == 2
+
+
+def test_ingest_batch_portable_ledger_rereads(spark, tmp_path_factory):
+    """portable=True writes md5-string signatures; the next epoch must read
+    the ledger back with that type and drop a duplicate through it."""
+    from watchman_spark.streaming.stream import ingest_batch
+
+    wh = ParquetWarehouse(str(tmp_path_factory.mktemp("portable_wh")))
+    first = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "one two three four five six")],
+        ["doc_id", "text"],
+    )
+    nxt = spark.createDataFrame(
+        [(9, "alpha beta gamma delta epsilon zeta")], ["doc_id", "text"]
+    )
+    kw = {"k": 3, "threshold": 0.5, "portable": True}
+    out = ingest_batch(spark, wh, first, 0, "p", **kw)
+    assert out == {"appended": 2, "dropped": 0, "reconciled": False}
+    out2 = ingest_batch(spark, wh, nxt, 1, "p", **kw)
+    assert out2 == {"appended": 0, "dropped": 1, "reconciled": False}
+    assert wh.table_rows("corpus_sig_ledger") == 2

@@ -178,22 +178,17 @@ def cmd_ingest(args) -> int:
     (+ itself), survivors are appended to the corpus table and their
     signatures to the ledger — the corpus text is never re-scanned, and
     replaying the same batch is a no-op (0 appended)."""
-    from pyspark.sql.types import StructType
-
-    from .operators.dedup import dedup_ingest_neardup
+    from .operators.dedup import dedup_ingest_neardup, ledger_signatures, sig_ledger_table
 
     spark = _session(args)
     wh = ParquetWarehouse(args.warehouse)
     batch = spark.read.parquet(args.input)
-    ledger_table = f"{args.corpus_table}_sig_ledger"
-    id_type = batch.schema[args.id_col].dataType.simpleString()
-    ledger = wh.read(
-        spark, ledger_table,
-        schema=StructType.fromDDL(f"id {id_type}, sig array<bigint>"),
-    )
+    ledger_table = sig_ledger_table(args.corpus_table)
+    kw = {"k": args.shingle_k, "threshold": args.threshold}
+    schema = ledger_signatures(batch, args.id_col, args.text_col, **kw).schema
+    ledger = wh.read(spark, ledger_table, schema=schema)
     survivors, sigs = dedup_ingest_neardup(
-        batch, ledger, id_col=args.id_col, text_col=args.text_col,
-        k=args.shingle_k, threshold=args.threshold,
+        batch, ledger, id_col=args.id_col, text_col=args.text_col, **kw
     )
     lineage = {"run_id": args.run_id}
     meta = wh.write_append(survivors, args.corpus_table, lineage=lineage)

@@ -18,18 +18,21 @@ collect. Scale notes per operator:
 
 from __future__ import annotations
 
+from functools import reduce
+from inspect import signature
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-# Scale-safe DEFAULTS (round-3 change: the caps used to be opt-in, which
-# left the naive call quadratic — the 100-TB-safe behavior must be the
-# default, and unbounded semantics the explicit opt-out via ``None``).
-# Sizing: a shingle/bucket key shared by d documents fans out d(d-1)/2
-# candidate pairs; 1000 caps a single key at ~500k pairs (one task's worth)
-# while real near-duplicate groups — which these operators exist to find —
-# are far smaller; keys hotter than that are stop-shingles / degenerate
-# clusters that carry no dedup signal (recall tests: test_dedup.py).
+# Scale-safe DEFAULTS: the naive call must not be quadratic, so the caps
+# are on unless the caller opts out with ``None`` (OPTIMIZATION_r06.md
+# "Dedup (design notes moved from code)"). Sizing: a shingle/bucket key
+# shared by d documents fans out d(d-1)/2 candidate pairs; 1000 caps a
+# single key at ~500k pairs (one task's worth) while real near-duplicate
+# groups — which these operators exist to find — are far smaller; keys
+# hotter than that are stop-shingles / degenerate clusters that carry no
+# dedup signal (recall tests: test_dedup.py).
 DEFAULT_MAX_DF = 1000
 DEFAULT_MAX_BUCKET = 500
 
@@ -66,6 +69,34 @@ def _drop_hot_keys(df: DataFrame, key_cols: list[str], cap: int | None) -> DataF
     return df.join(hot, key_cols, "left_anti")
 
 
+def _self_pairs(df: DataFrame, keys: list[str], carry=()) -> DataFrame:
+    """The one candidate generator: a self equi-join on the bucket ``keys``
+    with ``a.id < b.id`` (each unordered pair once, no self pairs), giving
+    distinct (id_a, id_b[, c_a, c_b for c in carry]). The id condition is
+    the join's last conjunct, so the bucket keys stay the equi-join keys
+    (plan-pinned against cartesians in tests/test_plans.py)."""
+    a, b = df.alias("a"), df.alias("b")
+    on = [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+    cols = [F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")]
+    for c in carry:
+        cols += [F.col(f"a.{c}").alias(f"{c}_a"), F.col(f"b.{c}").alias(f"{c}_b")]
+    return a.join(b, on + [F.col("a.id") < F.col("b.id")]).select(*cols).distinct()
+
+
+def _explode_bands(
+    df: DataFrame, keep: list[str], key: str, parts: list[Column]
+) -> DataFrame:
+    """(*keep, band, key): one row per band b with ``key = parts[b]`` — the
+    one map-side band exploder (a single Generate, no shuffle) under both
+    the MinHash band digests and the simhash chunks."""
+    bands = [
+        F.struct(F.lit(b).alias("band"), p.alias(key)) for b, p in enumerate(parts)
+    ]
+    return df.select(*keep, F.explode(F.array(*bands)).alias("bd")).select(
+        *keep, F.col("bd.band").alias("band"), F.col(f"bd.{key}").alias(key)
+    )
+
+
 def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
     """Groups of identical key_cols: keep lowest id, count members."""
     return df.groupBy(*key_cols).agg(
@@ -75,23 +106,11 @@ def exact_dedup(df: DataFrame, key_cols: list[str], id_col: str) -> DataFrame:
 
 def word_shingles(text: Column, k: int) -> Column:
     """Distinct word k-gram shingles of a text column (built-ins only).
-    Empty array when the text has fewer than k words."""
-    words = F.split(text, " ", -1)
-    n = F.size(words)
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                # k element_at lookups concat'd directly: measured ~10-35%
-                # faster than concat_ws(slice(...)) (no per-shingle array
-                # allocation), byte-identical output
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(words, i + j) for j in range(k)]
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    Empty array when the text has fewer than k words. The split is inline,
+    so each shingle re-reads it; the dedup paths stage it (_words_staged)."""
+    return _shingles_of_words(F.split(text, " ", -1), k).otherwise(
+        F.array().cast("array<string>")
+    )
 
 
 def _shingles_of_words(words: Column, k: int) -> Column:
@@ -107,8 +126,8 @@ def _shingles_of_words(words: Column, k: int) -> Column:
     size(shingles) > 0 predicate whose common-subexpression can evaluate
     the transform BEFORE the row filter, and the n < k case would then
     evaluate a descending sequence / out-of-range element_at — a runtime
-    error (observed as slice(start=0) in the r6 slice-based draft), not
-    just waste."""
+    error, not just waste (OPTIMIZATION_r06.md "Dedup (design notes moved
+    from code)")."""
     n = F.size(words)
     return F.when(
         n >= k,
@@ -147,7 +166,7 @@ def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     """(id, sh: array<string>) — one row per document that HAS shingles
     (docs with fewer than k words are dropped, mirroring what the exploded
     shingle_table's groupBy implies). The un-exploded form: the per-doc
-    set sizes and the exact-jaccard verify read it directly, so the r6
+    set sizes and the exact-jaccard verify read it directly, so the
     dedup paths shuffle candidate PAIRS instead of (pair × shingle)
     exploded rows (optimization guide §2.3/§2.4)."""
     return _words_staged(df, id_col, text_col, k).select(
@@ -176,19 +195,13 @@ def _agg_sigs(sh: DataFrame, n_hashes: int, portable: bool) -> DataFrame:
     """groupBy(id) with n_hashes MIN-hash aggregates over an exploded
     (id, shingle) table (duplicate shingles would not change a MIN, and
     both callers feed distinct shingles anyway)."""
-    if portable:
-        mins = [
-            F.min(
-                F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")).cast("binary"))
-            ).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    else:
-        mins = [
-            F.min(F.xxhash64(F.lit(i), F.col("shingle"))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    agg = sh.groupBy("id").agg(*mins)
+
+    def h(i: int) -> Column:
+        if portable:
+            return F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")).cast("binary"))
+        return F.xxhash64(F.lit(i), F.col("shingle"))
+
+    agg = sh.groupBy("id").agg(*[F.min(h(i)).alias(f"h{i}") for i in range(n_hashes)])
     return agg.select("id", F.array(*[f"h{i}" for i in range(n_hashes)]).alias("sig"))
 
 
@@ -211,16 +224,15 @@ def ngram_jaccard_pairs(
     (tests/test_dedup.py plants a stop-shingle and asserts true-pair recall
     is unchanged under the default cap)."""
     if max_df is None:
-        # EXACT mode, r6 shuffle-lean shape (guide §2.3 "shuffle keys and
-        # metadata instead of payloads"): candidates come from a self-join
-        # on the 8-byte xxhash64 of the shingle instead of the ~60-byte
-        # shingle string, and the exact jaccard is verified map-side via
-        # array_intersect over the per-doc shingle ARRAYS — the old shape
-        # shuffled (candidate-pair × shingle) exploded rows through a
-        # count exchange. A hash collision can only ADD a candidate pair,
-        # and the explicit shared>0 filter plus the exact array verify
-        # drop it again, so the output is row-identical (property-pinned
-        # in tests/test_props.py::test_ngram_jaccard_exact_mode...).
+        # EXACT mode (guide §2.3 "shuffle keys and metadata instead of
+        # payloads"): candidates come from a self-join on the 8-byte
+        # xxhash64 of the shingle instead of the ~60-byte shingle string,
+        # and the exact jaccard is verified map-side via array_intersect
+        # over the per-doc shingle ARRAYS (shape history: OPTIMIZATION_r06.md
+        # "Dedup (design notes moved from code)"). A hash collision can only
+        # ADD a candidate pair, and the explicit shared>0 filter plus the
+        # exact array verify drop it again, so the output is row-identical
+        # (property-pinned in tests/test_props.py::test_ngram_jaccard_exact_mode...).
         docs = _reused(_shingle_arrays(df, id_col, text_col, k))
         # explode the strings, hash in the SAME codegen stage: Generate +
         # xxhash64 both compile, while hashing inside a transform() lambda
@@ -228,13 +240,7 @@ def ngram_jaccard_pairs(
         sh = docs.select("id", F.explode("sh").alias("shingle")).select(
             "id", F.xxhash64("shingle").alias("h")
         )
-        a, b = sh.alias("a"), sh.alias("b")
-        candidates = (
-            a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")))
-            .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .distinct()
-        )
-        return _verify_pairs_exact(candidates, docs, threshold)
+        return _verify_pairs_exact(_self_pairs(sh, ["h"]), docs, threshold)
     base = shingle_table(df, id_col, text_col, k)
     # persist BEFORE the df-count + anti-join: both sides of
     # _drop_hot_keys read the shingle table, and without the persist
@@ -267,9 +273,8 @@ def _verify_pairs_exact(
 ) -> DataFrame:
     """Exact-jaccard verify of candidate (id_a, id_b) pairs against the
     (id, sh) shingle-array table: two id equi-joins fetch the arrays, then
-    shared = |A∩B| and jaccard are pure map-side expressions. Replaces the
-    old (pair × shingle) explode-join-count verify — the shuffle now
-    carries one row per candidate pair instead of ~2·|sh| rows per pair.
+    shared = |A∩B| and jaccard are pure map-side expressions, so the
+    shuffle carries one row per candidate pair, not ~2·|sh| exploded rows.
     shared must be > 0 (a pair that shares no shingle is a hash-collision
     or banding artifact, never a near-duplicate) so the candidate
     generator may over-approximate freely."""
@@ -288,6 +293,32 @@ def _verify_pairs_exact(
         )
         .filter((F.col("__shared") > 0) & (F.col("jaccard") >= threshold))
         .drop("__shared")
+    )
+
+
+def _verify_pairs_sig(
+    candidates: DataFrame,
+    sigs_a: DataFrame,
+    sigs_b: DataFrame,
+    ids: tuple[str, str],
+    n_hashes: int,
+    threshold: float,
+) -> DataFrame:
+    """Signature-estimate verify of candidate pairs named ``ids`` (e.g.
+    (id_a, id_b), or (id, corpus_id) against the ledger): two id
+    equi-joins fetch the (id, sig) rows of ``sigs_a``/``sigs_b``, then
+    sig_est_jaccard >= threshold. Returns (*ids, est_jaccard)."""
+    ia, ib = ids
+    a = sigs_a.select(F.col("id").alias(ia), F.col("sig").alias("sig_a"))
+    b = sigs_b.select(F.col("id").alias(ib), F.col("sig").alias("sig_b"))
+    return (
+        candidates.join(a, ia)
+        .join(b, ib)
+        .withColumn(
+            "est_jaccard", sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), n_hashes)
+        )
+        .filter(F.col("est_jaccard") >= threshold)
+        .select(ia, ib, "est_jaccard")
     )
 
 
@@ -337,17 +368,7 @@ def band_digest_table(
             return F.md5(F.concat_ws("|", *cols).cast("binary"))
         return F.xxhash64(*cols)
 
-    return sigs.select(
-        "id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_digest(b).alias("digest"))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bd"),
-    ).select("id", F.col("bd.band").alias("band"), F.col("bd.digest").alias("digest"))
+    return _explode_bands(sigs, ["id"], "digest", [band_digest(b) for b in range(bands)])
 
 
 def minhash_lsh_pairs(
@@ -389,25 +410,9 @@ def minhash_lsh_pairs(
     sigs = _reused(_sigs_from_shingle_arrays(docs, n_hashes, portable))
     banded = band_digest_table(sigs, n_hashes, bands, portable)
     banded = _drop_hot_keys(banded, ["band", "digest"], max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.digest") == F.col("b.digest"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-    # exact verify: jaccard over true shingle sets, only for candidates
-    # (banded pairs always share their band's signature slice, but the
-    # shared>0 guard inside _verify_pairs_exact keeps the semantics
-    # airtight even for a slice-collision pair with disjoint sets — such a
-    # pair scores jaccard 0 and is dropped exactly as the old
-    # explode-count verify dropped it by producing no joined rows)
-    return _verify_pairs_exact(candidates, docs, threshold)
+    # exact verify over the true shingle sets; its shared>0 guard drops a
+    # slice-collision pair with disjoint sets
+    return _verify_pairs_exact(_self_pairs(banded, ["band", "digest"]), docs, threshold)
 
 
 def content_hashes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -485,39 +490,14 @@ def _ingest_matches(
         .select("id", "corpus_id")
         .distinct()
     )
-    corpus_matches = (
-        corpus_cand.join(sigs.select("id", F.col("sig").alias("sig_a")), "id")
-        .join(
-            ledger_sigs.select(
-                F.col("id").alias("corpus_id"), F.col("sig").alias("sig_b")
-            ),
-            "corpus_id",
-        )
-        .withColumn(
-            "est_jaccard", sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), n_hashes)
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id", "corpus_id", "est_jaccard")
+    corpus_matches = _verify_pairs_sig(
+        corpus_cand, sigs, ledger_sigs, ("id", "corpus_id"), n_hashes, threshold
     )
     # within-batch candidates: the usual banded self-join
     bb = _drop_hot_keys(batch_banded, ["band", "digest"], max_bucket)
-    a, b = bb.alias("a"), bb.alias("b")
-    batch_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.digest") == F.col("b.digest"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-        .join(sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")), "id_b")
-        .withColumn(
-            "est_jaccard", sig_est_jaccard(F.col("sig_a"), F.col("sig_b"), n_hashes)
-        )
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
+    batch_pairs = _verify_pairs_sig(
+        _self_pairs(bb, ["band", "digest"]), sigs, sigs, ("id_a", "id_b"),
+        n_hashes, threshold,
     )
     return corpus_matches, batch_pairs
 
@@ -554,10 +534,10 @@ def dedup_ingest_neardup(
     portable: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """INCREMENTAL NEAR-DUP dedup — the composition a production ingest
-    loop runs per batch (round-4 'What's missing #2'): the committed
-    corpus is represented ONLY by its MinHash signature ledger
-    (``ledger_sigs``: (id, sig), ~n_hashes longs per document — the text
-    is never re-scanned), and each new batch is LSH-joined against that
+    loop runs per batch: the committed corpus is represented ONLY by its
+    MinHash signature ledger (``ledger_sigs``: (id, sig), ~n_hashes longs
+    per document — the text is never re-scanned; its table name is
+    sig_ledger_table), and each new batch is LSH-joined against that
     ledger plus itself.
 
     Per batch: (1) signatures for the batch (one explode + groupBy);
@@ -621,6 +601,28 @@ def dedup_ingest_neardup(
         survivors.select(F.col(id_col).alias("id")), "id", "left_semi"
     )
     return survivors, survivor_sigs
+
+
+def sig_ledger_table(corpus_table: str) -> str:
+    """The warehouse table holding ``corpus_table``'s (id, sig) signature
+    ledger, which dedup_ingest_neardup's callers read and append to."""
+    return f"{corpus_table}_sig_ledger"
+
+
+def ledger_signatures(
+    rows: DataFrame, id_col: str, text_col: str, **dedup_kw
+) -> DataFrame:
+    """The (id, sig) ledger rows dedup_ingest_neardup(**dedup_kw) appends
+    for ``rows`` when they all survive, under its own defaults for k,
+    n_hashes and portable, so re-deriving the signatures of committed rows
+    (a crash between the corpus and ledger appends) matches a fresh ingest.
+    Its ``.schema`` is the ledger's read schema, also before the first
+    append (sig is array<string> when ``portable``)."""
+    params = signature(dedup_ingest_neardup).parameters
+    kw = {n: p.default for n, p in params.items()} | dedup_kw
+    return minhash_signatures(
+        rows, id_col, text_col, kw["k"], kw["n_hashes"], kw["portable"]
+    )
 
 
 def contamination(
@@ -748,27 +750,31 @@ def resolve_components(
     )
 
 
+def _simhash(text: Column, token_hash, bit_set, n_bits: int) -> Column:
+    """The one simhash vote: over the distinct space-split tokens, bit b is
+    set iff more than half of the token hashes (``token_hash(token)``) have
+    ``bit_set(hash, b)``; the n_bits votes are OR-folded into one integer."""
+    hashes = F.transform(F.array_distinct(F.split(text, " ", -1)), token_hash)
+    n = F.size(hashes)
+    bits = [
+        F.when(
+            F.size(F.filter(hashes, lambda h: bit_set(h, b))) * 2 > n, F.lit(1 << b)
+        ).otherwise(F.lit(0))
+        for b in range(n_bits)
+    ]
+    return reduce(lambda x, y: x.bitwiseOR(y), bits)
+
+
 def simhash64(text: Column) -> Column:
     """64-bit simhash from word-token hash bit votes — pure JVM expressions.
 
-    For each of 64 bit positions, the bit is 1 iff the majority of token
-    hashes have that bit set. Token hash = xxhash64(token).
+    For each bit position, the bit is 1 iff the majority of token hashes
+    have that bit set. Token hash = xxhash64(token). The sign bit is
+    skipped (63 votes) so results stay positive longs.
     """
-    tokens = F.array_distinct(F.split(text, " ", -1))
-    hashes = F.transform(tokens, lambda w: F.xxhash64(w))
-    n = F.size(hashes)
-    # votes[i] = count of hashes with bit i set; bit -> 1 if votes > n/2
-    bits = [
-        F.when(
-            F.size(F.filter(hashes, lambda h: h.bitwiseAND(F.lit(1 << i)) != 0)) * 2 > n,
-            F.lit(1 << i),
-        ).otherwise(F.lit(0))
-        for i in range(63)  # skip the sign bit: keep results positive longs
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
+    return _simhash(
+        text, lambda w: F.xxhash64(w), lambda h, b: h.bitwiseAND(F.lit(1 << b)) != 0, 63
+    )
 
 
 def simhash64_portable(text: Column, n_bits: int = 16) -> Column:
@@ -779,25 +785,12 @@ def simhash64_portable(text: Column, n_bits: int = 16) -> Column:
     plane_signs, portable minhash, now simhash). Default 16 bits keeps the
     vote expression tree (n_bits filters over the token array) compact;
     the xxhash64 simhash64 above remains the fast 63-bit production path."""
-    tokens = F.array_distinct(F.split(text, " ", -1))
-    hashes = F.transform(tokens, lambda w: F.md5(w.cast("binary")))
-    n = F.size(hashes)
 
     def bit_set(h: Column, b: int) -> Column:
         nibble = F.conv(F.substring(h, b // 4 + 1, 1), 16, 10).cast("int")
         return nibble.bitwiseAND(F.lit(1 << (b % 4))) != 0
 
-    bits = [
-        F.when(
-            F.size(F.filter(hashes, lambda h: bit_set(h, b))) * 2 > n,
-            F.lit(1 << b),
-        ).otherwise(F.lit(0))
-        for b in range(n_bits)
-    ]
-    out = bits[0]
-    for piece in bits[1:]:
-        out = out.bitwiseOR(piece)
-    return out.cast("long")
+    return _simhash(text, lambda w: F.md5(w.cast("binary")), bit_set, n_bits).cast("long")
 
 
 def simhash_portable_sql(text_sql: str, n_bits: int = 16) -> str:
@@ -835,40 +828,12 @@ def simhash_pairs(
     sims = _reused(
         df.select(F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sim"))
     )
-    banded = sims.select(
-        "id",
-        "sim",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.shiftrightunsigned("sim", b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bd"),
-    ).select("id", "sim", F.col("bd.band").alias("band"), F.col("bd.chunk").alias("chunk"))
+    chunks = [
+        F.shiftrightunsigned("sim", b * width).bitwiseAND(F.lit((1 << width) - 1))
+        for b in range(bands)
+    ]
+    banded = _explode_bands(sims, ["id", "sim"], "chunk", chunks)
     banded = _drop_hot_keys(banded, ["band", "chunk"], max_bucket)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sim").alias("sim_a"),
-            F.col("b.sim").alias("sim_b"),
-        )
-        .distinct()
-    )
+    cand = _self_pairs(banded, ["band", "chunk"], carry=["sim"])
     hamming = F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming")
     return cand.select("id_a", "id_b", hamming).filter(F.col("hamming") <= max_hamming)

@@ -288,9 +288,3 @@ def run_pipeline(
     if metrics_path:
         m.write(metrics_path)
     return m
-
-
-def read_sink_counts(spark: SparkSession, wh: ParquetWarehouse) -> DataFrame:
-    """Final per-sink totals: re-aggregate the per-run partial counts."""
-    parts = wh.read(spark, "agg_sink_counts")
-    return parts.groupBy("sink").agg(F.sum("n").alias("n"))

@@ -205,13 +205,6 @@ def late_data_audit(
     return stream.groupBy(F.window("ts", window)).agg(F.count(F.lit(1)).alias("n_all"))
 
 
-def _ledger_schema(batch_df: DataFrame, id_col: str):
-    from pyspark.sql.types import StructType
-
-    id_type = batch_df.schema[id_col].dataType.simpleString()
-    return StructType.fromDDL(f"id {id_type}, sig array<bigint>")
-
-
 def ingest_batch(
     spark: SparkSession,
     wh: ParquetWarehouse,
@@ -247,9 +240,9 @@ def ingest_batch(
 
     Returns {"appended": n, "dropped": n, "reconciled": bool}.
     """
-    from ..operators.dedup import dedup_ingest_neardup, minhash_signatures
+    from ..operators.dedup import dedup_ingest_neardup, ledger_signatures, sig_ledger_table
 
-    ledger_table = f"{corpus_table}_sig_ledger"
+    ledger_table = sig_ledger_table(corpus_table)
     mine = {
         c["id"]: c
         for c in wh.commits(corpus_table)
@@ -269,17 +262,14 @@ def ingest_batch(
         committed_rows = wh.read(
             spark, corpus_table, snapshot=cid, from_snapshot=cid - 1
         )
-        sigs = minhash_signatures(
-            committed_rows, id_col, text_col,
-            k=dedup_kw.get("k", 5), n_hashes=dedup_kw.get("n_hashes", 32),
-            portable=dedup_kw.get("portable", False),
-        )
+        sigs = ledger_signatures(committed_rows, id_col, text_col, **dedup_kw)
         wh.write_append(
             sigs, ledger_table, lineage={"run_id": run_id, "epoch": epoch_id}
         )
         batch_df.count()
         return {"appended": 0, "dropped": 0, "reconciled": True}
-    ledger = wh.read(spark, ledger_table, schema=_ledger_schema(batch_df, id_col))
+    schema = ledger_signatures(batch_df, id_col, text_col, **dedup_kw).schema
+    ledger = wh.read(spark, ledger_table, schema=schema)
     survivors, sigs = dedup_ingest_neardup(
         batch_df, ledger, id_col=id_col, text_col=text_col, **dedup_kw
     )
