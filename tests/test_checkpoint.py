@@ -276,6 +276,47 @@ def test_job_ingest_subcommand(spark, tmp_path, capsys):
     assert sorted(r["doc_id"] for r in wh.read(spark, "corpus").collect()) == [1, 2, 11]
 
 
+def test_job_ingest_crash_between_appends_no_duplicates(spark, tmp_path, capsys, monkeypatch):
+    """job.py ingest dies AFTER its corpus append and BEFORE its ledger
+    append; rerunning the same command completes the interrupted epoch
+    (signatures for the committed docs) instead of appending the batch
+    again."""
+    import json as _json
+
+    from watchman_spark.job import main as job_main
+    from watchman_spark.sources.warehouse import ParquetWarehouse
+
+    wh_root = str(tmp_path / "wh")
+    b1 = str(tmp_path / "b1.parquet")
+    spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog again and again today"),
+         (2, "completely different content about query engines")],
+        ["doc_id", "text"],
+    ).write.parquet(b1)
+    argv = ["ingest", "--warehouse", wh_root, "--input", b1,
+            "--shingle-k", "3", "--threshold", "0.5"]
+
+    real_append = ParquetWarehouse.write_append
+
+    def dying_append(self, df, table, *a, **kw):
+        if table.endswith("_sig_ledger"):
+            raise RuntimeError("injected crash before the ledger append")
+        return real_append(self, df, table, *a, **kw)
+
+    monkeypatch.setattr(ParquetWarehouse, "write_append", dying_append)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        job_main(argv)
+    monkeypatch.setattr(ParquetWarehouse, "write_append", real_append)
+    capsys.readouterr()
+
+    assert job_main(argv) == 0
+    out = _json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["appended"] == 0 and out["corpus_rows"] == 2
+    wh = ParquetWarehouse(wh_root)
+    assert sorted(r["doc_id"] for r in wh.read(spark, "corpus").collect()) == [1, 2]
+    assert wh.table_rows("corpus_sig_ledger") == 2
+
+
 def test_job_compact_subcommand(spark, tmp_path, capsys):
     """job.py compact: the operational maintenance pass — many small
     appends collapse to one compact replace commit, --expire reclaims the

@@ -454,6 +454,14 @@ def test_candidate_self_join_is_equi_join(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_fingerprint_splits_each_document_once(spark):
+    # the shingles read a staged words column; an inline split(text) would
+    # be copied into each shingle's element_at lookup (O(words²) per doc)
+    df = QUERIES["text_fingerprint"](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "element_at(split(" not in plan, plan
+
+
 def test_log_templates_single_exchange_partial_agg(spark):
     # masking is map-side JVM regex (a Project directly over the scan);
     # the exact n_users distinct expands to Spark's standard two-level

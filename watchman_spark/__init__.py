@@ -9,8 +9,8 @@ parse-and-route log processors (spec: /root/repo/BASELINE.json `north_star` /
 - grok-style parsing is vectorized (JVM ``regexp_extract`` path for built-in
   speed, Arrow ``pandas_udf`` path for generality — never per-row Python),
 - dimension enrichment is an explicit broadcast hash join,
-- routing is a tag expression + per-sink filtered appends from one persisted
-  pass,
+- routing is a tag expression + one staged ``partitionBy("sink",
+  "conv_bucket")`` write whose per-sink subtrees are committed atomically,
 - hot-key (conversation) skew is defused with salted two-stage aggregation,
 - runs are resumable from a commit-log checkpoint with per-partition lineage.
 

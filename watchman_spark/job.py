@@ -177,27 +177,31 @@ def cmd_ingest(args) -> int:
     batch is LSH-checked against the warehouse's MinHash signature ledger
     (+ itself), survivors are appended to the corpus table and their
     signatures to the ledger — the corpus text is never re-scanned, and
-    replaying the same batch is a no-op (0 appended)."""
-    from .operators.dedup import dedup_ingest_neardup, ledger_signatures, sig_ledger_table
+    replaying the same batch is a no-op (0 appended).
+
+    Each call is one epoch of ``--run-id`` through streaming's
+    ``ingest_batch``, so the CLI shares its exactly-once path: a fresh call
+    takes the run's next epoch. If the last epoch's corpus append committed
+    but its ledger append did not (a crash between the two), a rerun
+    completes that interrupted epoch instead and does NOT ingest the new
+    input (``"reconciled": true``); run the command again to ingest it."""
+    from .operators.dedup import sig_ledger_table
+    from .streaming.stream import committed_epochs, ingest_batch
 
     spark = _session(args)
     wh = ParquetWarehouse(args.warehouse)
     batch = spark.read.parquet(args.input)
     ledger_table = sig_ledger_table(args.corpus_table)
-    kw = {"k": args.shingle_k, "threshold": args.threshold}
-    schema = ledger_signatures(batch, args.id_col, args.text_col, **kw).schema
-    ledger = wh.read(spark, ledger_table, schema=schema)
-    survivors, sigs = dedup_ingest_neardup(
-        batch, ledger, id_col=args.id_col, text_col=args.text_col, **kw
+    epochs = committed_epochs(wh, args.run_id, [args.corpus_table, ledger_table])
+    last = max(epochs, default=-1)
+    epoch = last if last >= 0 and ledger_table not in epochs[last] else last + 1
+    out = ingest_batch(
+        spark, wh, batch, epoch, args.run_id, args.corpus_table, args.id_col,
+        args.text_col, k=args.shingle_k, threshold=args.threshold,
     )
-    lineage = {"run_id": args.run_id}
-    meta = wh.write_append(survivors, args.corpus_table, lineage=lineage)
-    wh.write_append(sigs, ledger_table, lineage=lineage)
-    n_batch = batch.count()
     print(json.dumps({
-        "batch_rows": n_batch,
-        "appended": meta["rows"],
-        "dropped": n_batch - meta["rows"],
+        "batch_rows": batch.count(),
+        **out,
         "corpus_rows": wh.table_rows(args.corpus_table),
         "ledger_rows": wh.table_rows(ledger_table),
     }))

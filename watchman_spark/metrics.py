@@ -1,7 +1,8 @@
 """Run metrics — counts, throughput, parse misses (BASELINE.json:14).
 
-Counter values come from commit metadata and cheap aggregates over the
-already-persisted routed pass (never a second scan of the input)."""
+Counter values come from commit metadata and the parquet footer stats of
+the staged routed write: per-sink rows, and parse misses as the default
+sink's non-null text count (never a second scan of the input)."""
 
 from __future__ import annotations
 

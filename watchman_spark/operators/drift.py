@@ -29,40 +29,22 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def histogram(df: DataFrame, value: Column, bin_width: int) -> DataFrame:
-    """(bucket, n) histogram of an integer-valued expression: bucket =
-    floor(value / bin_width). One partial-agg exchange; n_buckets rows."""
-    return (
-        df.select((F.floor(value / bin_width)).cast("long").alias("bucket"))
-        .groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
+from pyspark.storagelevel import StorageLevel
 
 
 def drift_bins(
     ref: DataFrame, cur: DataFrame, value: Column, bin_width: int
 ) -> DataFrame:
     """Per-bucket (bucket, n_ref, n_cur) comparison of the two slices'
-    histograms — full outer so a bucket present on one side only still
-    contributes its whole mass to the distance."""
-    h_ref = histogram(ref, value, bin_width).withColumnRenamed("n", "n_ref")
-    h_cur = histogram(cur, value, bin_width).withColumnRenamed("n", "n_cur")
-    return (
-        h_ref.join(h_cur, "bucket", "full_outer")
-        .select(
-            "bucket",
-            F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
-            F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
-        )
-    )
+    histograms of an integer-valued expression, bucket = floor(value /
+    bin_width): drift_cat_bins over the bucket number."""
+    return drift_cat_bins(ref, cur, F.floor(value / bin_width).cast("long"))
 
 
 def drift_cat_bins(ref: DataFrame, cur: DataFrame, key: Column) -> DataFrame:
-    """Categorical twin of drift_bins: (bucket, n_ref, n_cur) where the
-    bucket is a discrete key (a log template, an event type, a language
-    tag) instead of a numeric histogram bin. Full outer, zero-filled —
+    """(bucket, n_ref, n_cur) where the bucket is a discrete key (a log
+    template, an event type, a language tag, a drift_bins histogram bin).
+    One partial-agg exchange per side; full outer, zero-filled —
     a template that appears on only one side contributes its whole mass
     to the distance, which is exactly the signal a template-drift
     monitor exists to catch (a NEW error template showing up is drift
@@ -77,6 +59,18 @@ def drift_cat_bins(ref: DataFrame, cur: DataFrame, key: Column) -> DataFrame:
     )
 
 
+def _with_totals(bins: DataFrame) -> DataFrame:
+    """The bins table with its side totals (N, M) on every row. ``bins`` is
+    persisted because it feeds BOTH the totals aggregate and the per-bin
+    rows; without it the whole upstream (two histogram scans + the
+    full-outer join) would run twice per statistic (plan-asserted single
+    join in tests/test_plans.py). The table is n_buckets rows, so the
+    persist is metadata-sized."""
+    bins = bins.persist(StorageLevel.MEMORY_AND_DISK)
+    totals = bins.agg(F.sum("n_ref").alias("N"), F.sum("n_cur").alias("M"))
+    return bins.crossJoin(F.broadcast(totals))
+
+
 def total_variation(bins: DataFrame) -> DataFrame:
     """One-row (tv_num, n_ref_total, n_cur_total, tv) from a drift_bins
     table. tv_num = Σ|n_i·M - m_i·N| is exact; tv = tv_num/(2NM)
@@ -88,21 +82,8 @@ def total_variation(bins: DataFrame) -> DataFrame:
     N·M ≲ 4.6e12 — ample for any windowed monitoring slice (10^6 docs a
     side). Full-corpus 10^12-row sides overflow the exact path; there,
     drift runs on sampled or windowed slices (which is what a monitor
-    does anyway), or on the double-valued psi() below.
-
-    r6: ``bins`` is persisted — it feeds BOTH the totals aggregate and
-    the scaled sum, and without the persist the entire upstream (two
-    histogram scans + the full-outer join) executed twice per statistic
-    (visible as two FullOuter SortMergeJoins in the old executed plan;
-    plan-asserted single-join in tests/test_plans.py). The table is
-    n_buckets rows — the persist is metadata-sized."""
-    from pyspark.storagelevel import StorageLevel
-
-    bins = bins.persist(StorageLevel.MEMORY_AND_DISK)
-    totals = bins.agg(
-        F.sum("n_ref").alias("N"), F.sum("n_cur").alias("M")
-    )
-    scaled = bins.crossJoin(F.broadcast(totals)).select(
+    does anyway), or on the double-valued psi() below."""
+    scaled = _with_totals(bins).select(
         F.abs(F.col("n_ref") * F.col("M") - F.col("n_cur") * F.col("N")).alias(
             "d"
         ),
@@ -174,13 +155,8 @@ def psi(bins: DataFrame, epsilon: float = 1e-6) -> DataFrame:
     empty on one side otherwise makes the index infinite). Conventional
     reading: <0.1 stable, 0.1-0.25 moderate shift, >0.25 action.
     ln() is engine-rounded, so this is the pytest-pinned twin of the
-    exactly-portable total_variation. Persisted for the same
-    two-consumer reason as total_variation."""
-    from pyspark.storagelevel import StorageLevel
-
-    bins = bins.persist(StorageLevel.MEMORY_AND_DISK)
-    totals = bins.agg(F.sum("n_ref").alias("N"), F.sum("n_cur").alias("M"))
-    w = bins.crossJoin(F.broadcast(totals)).select(
+    exactly-portable total_variation."""
+    w = _with_totals(bins).select(
         (F.col("n_ref") / F.col("N") + epsilon).alias("p"),
         (F.col("n_cur") / F.col("M") + epsilon).alias("q"),
     )

@@ -69,9 +69,6 @@ def bm25_scores(
         F.size(F.filter(tokens, _eq(t))).alias(f"__tf_{i}")
         for i, t in enumerate(terms)
     ]
-    stack_args = ", ".join(
-        "'{}', __tf_{}".format(t.replace("'", "''"), i) for i, t in enumerate(terms)
-    )
     # r6 second pass (guide §1.2 "don't compute things twice"): persist the
     # pre-stack projection (doc_id, dl, per-term counts — a few ints/doc)
     # and derive BOTH the tf table and the corpus aggregate from it. The
@@ -83,10 +80,9 @@ def bm25_scores(
         F.size(tokens).alias("dl"),
         *tf_cols,
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    tf = pre.selectExpr(
-        "doc_id",
-        "dl",
-        f"stack({len(terms)}, {stack_args}) AS (term, tf)",
+    pairs = [c for i, t in enumerate(terms) for c in (F.lit(t), F.col(f"__tf_{i}"))]
+    tf = pre.select(
+        "doc_id", "dl", F.stack(F.lit(len(terms)), *pairs).alias("term", "tf")
     ).filter(F.col("tf") > 0)
     corpus = pre.agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import word_shingles
+from .dedup import _shingles_of_words
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
@@ -223,11 +223,13 @@ def normalize_text(text: Column) -> Column:
     return F.trim(out)
 
 
-def fingerprint(text: Column, k: int = 5) -> Column:
+def fingerprint(words: Column, k: int = 5) -> Column:
     """Deterministic document fingerprint: lexicographic min of sha256 over
     word-k-gram shingles (a 1-perm MinHash with a portable hash). Null for
-    docs shorter than k words."""
-    return F.array_min(F.transform(word_shingles(text, k), lambda s: F.sha2(s, 256)))
+    docs shorter than k words. ``words`` is the document's split words as
+    a STAGED column reference (see dedup._shingles_of_words): an inline
+    split would be re-evaluated inside every shingle."""
+    return F.array_min(F.transform(_shingles_of_words(words, k), lambda s: F.sha2(s, 256)))
 
 
 def log_template(text: Column) -> Column:

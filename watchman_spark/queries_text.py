@@ -668,8 +668,9 @@ def text_tokens(spark, sf_dir):
 def text_fingerprint(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
     return (
-        d.filter(F.size(F.split("text", " ", -1)) >= 5)
-        .select("doc_id", textstats.fingerprint(F.col("text"), k=5).alias("fp"))
+        d.select("doc_id", F.split("text", " ", -1).alias("w"))
+        .filter(F.size("w") >= 5)
+        .select("doc_id", textstats.fingerprint(F.col("w"), k=5).alias("fp"))
     )
 
 

@@ -24,13 +24,12 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "total long, convs_seen long, first_ts timestamp, last_ts timestamp"
 
 
-def _fold(
-    sink: str, prev: tuple | None, pdfs: Iterable[pd.DataFrame]
-) -> tuple[tuple, pd.DataFrame]:
-    """Fold one micro-batch of a sink's rows into its counters. ``prev``
-    is the stored (total, convs_seen, first_ts, last_ts) or None; returns
-    the new state and the one-row output frame."""
-    total, convs_seen, first_ts, last_ts = prev if prev is not None else (0, 0, None, None)
+def _update(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    """Fold one micro-batch of a sink's rows into its stored (total,
+    convs_seen, first_ts, last_ts) and emit the one-row output frame."""
+    total, convs_seen, first_ts, last_ts = state.get if state.exists else (0, 0, None, None)
     batch_rows = 0
     convs = set()
     for pdf in pdfs:
@@ -45,9 +44,10 @@ def _fold(
     # dropDuplicates operator upstream; at scale you'd keep an HLL sketch
     # in the state blob instead)
     convs_seen += len(convs)
-    row = pd.DataFrame(
+    state.update((total, convs_seen, first_ts, last_ts))
+    yield pd.DataFrame(
         {
-            "sink": [sink],
+            "sink": [key[0]],
             "total": [total],
             "batch_rows": [batch_rows],
             "convs_seen": [convs_seen],
@@ -55,15 +55,6 @@ def _fold(
             "last_ts": [last_ts],
         }
     )
-    return (total, convs_seen, first_ts, last_ts), row
-
-
-def _update(
-    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-) -> Iterable[pd.DataFrame]:
-    new, row = _fold(key[0], state.get if state.exists else None, pdfs)
-    state.update(new)
-    yield row
 
 
 def running_sink_counters(tagged: DataFrame) -> DataFrame:
@@ -77,66 +68,3 @@ def running_sink_counters(tagged: DataFrame) -> DataFrame:
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# Spark 4 transformWithStateInPandas variant (the successor API:
-# composable typed state variables, timers, TTL). Runtime execution needs
-# the RocksDB state store AND the google.protobuf package for the
-# state-server protocol; protobuf is absent in this sandbox, so the full
-# run is covered by a skip-marked test while plan construction (the JVM
-# side) is asserted unconditionally — the applyInPandasWithState variant
-# above remains the in-sandbox-verified implementation of T6.
-# ---------------------------------------------------------------------------
-
-def _tws_available() -> bool:
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_sink_counter_processor():
-    """Build the StatefulProcessor class lazily (the import is cheap and
-    present in pyspark 4.x; only RUNNING it needs protobuf)."""
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class SinkCounterProcessor(StatefulProcessor):
-        """Same counters as _update, on the typed-state API: one ValueState
-        per sink holding (total, convs_seen, first_ts, last_ts)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.totals = handle.getValueState("totals", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timer_values):
-            prev = self.totals.get() if self.totals.exists() else None
-            new, row = _fold(key[0], prev, rows)
-            self.totals.update(new)
-            yield row
-
-        def close(self) -> None:
-            pass
-
-    return SinkCounterProcessor()
-
-
-def running_sink_counters_tws(tagged: DataFrame) -> DataFrame:
-    """running_sink_counters on transformWithStateInPandas. Requires the
-    RocksDB state store provider on the session:
-
-        spark.sql.streaming.stateStore.providerClass =
-          org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    """
-    from pyspark.sql.types import _parse_datatype_string
-
-    return (
-        tagged.select("sink", "conv_id", "ts")
-        .groupBy("sink")
-        .transformWithStateInPandas(
-            make_sink_counter_processor(),
-            outputStructType=_parse_datatype_string(OUTPUT_SCHEMA),
-            outputMode="Update",
-            timeMode="None",
-        )
-    )

@@ -66,29 +66,41 @@ def sessionized_counts(
 
 
 def committed_epochs(
-    wh: ParquetWarehouse, run_id: str, sinks: tuple[str, ...]
-) -> dict[int, set[str]]:
-    """{epoch: sinks already committed} for this run_id — ONE commit-log
-    scan covering every epoch, loaded at stream start (route_stream keeps
-    it in memory afterwards, so replay protection costs O(1) log scans per
-    query lifetime yet covers checkpoint-recreated streams that reuse a
-    run_id, not just the single epoch Structured Streaming itself can
-    replay)."""
-    out: dict[int, set[str]] = {}
-    for sink in sinks:
-        for c in wh.commits(f"sink_{sink}"):
+    wh: ParquetWarehouse, run_id: str, tables: list[str]
+) -> dict[int, dict[str, int]]:
+    """{epoch: {table: commit id}} of this run_id's epoch commits — the one
+    reader of (run_id, epoch) lineage, ONE commit-log scan per table
+    covering every epoch. route_stream loads it once at stream start and
+    keeps it in memory afterwards, so replay protection costs O(1) log
+    scans per query lifetime yet covers checkpoint-recreated streams that
+    reuse a run_id, not just the single epoch Structured Streaming itself
+    can replay."""
+    out: dict[int, dict[str, int]] = {}
+    for table in tables:
+        for c in wh.commits(table):
             lin = c.get("lineage", {})
             if lin.get("run_id") == run_id and "epoch" in lin:
-                out.setdefault(lin["epoch"], set()).add(sink)
+                out.setdefault(lin["epoch"], {})[table] = c["id"]
     return out
 
 
-def committed_epoch_sinks(
-    wh: ParquetWarehouse, run_id: str, epoch_id: int, sinks: tuple[str, ...]
-) -> set[str]:
-    """Sinks whose commit log already holds a (run_id, epoch) commit —
-    the idempotence check for micro-batch replay."""
-    return committed_epochs(wh, run_id, sinks).get(epoch_id, set())
+def _sinks_done(wh: ParquetWarehouse, cfg: PipelineConfig) -> dict[int, set[str]]:
+    """{epoch: sinks already committed} for cfg.run_id."""
+    epochs = committed_epochs(wh, cfg.run_id, [f"sink_{s}" for s in cfg.sink_names])
+    return {e: {t.removeprefix("sink_") for t in done} for e, done in epochs.items()}
+
+
+def _start(
+    stream: DataFrame, on_batch, checkpoint_dir: str | None, trigger_once: bool
+) -> StreamingQuery:
+    """Start ``on_batch`` as the stream's foreachBatch sink, with the
+    optional checkpoint and availableNow trigger."""
+    writer = stream.writeStream.foreachBatch(on_batch).outputMode("append")
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    if trigger_once:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def route_batch(
@@ -123,12 +135,9 @@ def route_batch(
     this; a stream over a source that changed since the last run must use
     a fresh run_id, otherwise its epochs would be wrongly skipped.
     """
-    done = (
-        done_sinks
-        if done_sinks is not None
-        else committed_epoch_sinks(wh, cfg.run_id, epoch_id, cfg.sink_names)
-    )
-    if len(done) == len(cfg.sink_names):
+    if done_sinks is None:
+        done_sinks = _sinks_done(wh, cfg).get(epoch_id, set())
+    if len(done_sinks) == len(cfg.sink_names):
         # full replay skip — but still EXECUTE the batch (count is the
         # cheapest total action): inside a stream the upstream stateful
         # dropDuplicates only commits its state stores when the micro-batch
@@ -143,7 +152,7 @@ def route_batch(
     with StagedWrite(keyed, cfg, f"epoch-{epoch_id}", role_dim, tool_dim) as st:
         st.write()
         st.footer_stats()
-        return st.commit(wh, {"run_id": cfg.run_id, "epoch": epoch_id}, skip=done)
+        return st.commit(wh, {"run_id": cfg.run_id, "epoch": epoch_id}, skip=done_sinks)
 
 
 def route_stream(
@@ -177,23 +186,15 @@ def route_stream(
         )
     else:
         deduped = stream.dropDuplicates(["conv_id", "turn_idx"])
-    index: dict = {"v": None}  # epoch -> committed sinks; one log scan, lazy
+    index = _sinks_done(wh, cfg)  # epoch -> committed sinks; one log scan
 
     def _on_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if index["v"] is None:
-            index["v"] = committed_epochs(wh, cfg.run_id, cfg.sink_names)
-        done = index["v"].get(epoch_id, set())
-        committed = route_batch(
+        done = index.setdefault(epoch_id, set())
+        done.update(route_batch(
             wh, cfg, batch_df, epoch_id, role_dim, tool_dim, done_sinks=done
-        )
-        index["v"].setdefault(epoch_id, set()).update(committed)
+        ))
 
-    writer = deduped.writeStream.foreachBatch(_on_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(deduped, _on_batch, checkpoint_dir, trigger_once)
 
 
 def late_data_audit(
@@ -243,37 +244,24 @@ def ingest_batch(
     from ..operators.dedup import dedup_ingest_neardup, ledger_signatures, sig_ledger_table
 
     ledger_table = sig_ledger_table(corpus_table)
-    mine = {
-        c["id"]: c
-        for c in wh.commits(corpus_table)
-        if c.get("lineage", {}).get("run_id") == run_id
-        and c.get("lineage", {}).get("epoch") == epoch_id
-    }
-    ledger_done = any(
-        c.get("lineage", {}).get("run_id") == run_id
-        and c.get("lineage", {}).get("epoch") == epoch_id
-        for c in wh.commits(ledger_table)
-    )
-    if mine and ledger_done:
+    done = committed_epochs(wh, run_id, [corpus_table, ledger_table]).get(epoch_id, {})
+    lineage = {"run_id": run_id, "epoch": epoch_id}
+    if corpus_table in done:
+        reconcile = ledger_table not in done
+        if reconcile:
+            cid = done[corpus_table]
+            committed_rows = wh.read(
+                spark, corpus_table, snapshot=cid, from_snapshot=cid - 1
+            )
+            sigs = ledger_signatures(committed_rows, id_col, text_col, **dedup_kw)
+            wh.write_append(sigs, ledger_table, lineage=lineage)
         batch_df.count()  # consume the epoch for the commit tracker
-        return {"appended": 0, "dropped": 0, "reconciled": False}
-    if mine and not ledger_done:
-        cid = max(mine)
-        committed_rows = wh.read(
-            spark, corpus_table, snapshot=cid, from_snapshot=cid - 1
-        )
-        sigs = ledger_signatures(committed_rows, id_col, text_col, **dedup_kw)
-        wh.write_append(
-            sigs, ledger_table, lineage={"run_id": run_id, "epoch": epoch_id}
-        )
-        batch_df.count()
-        return {"appended": 0, "dropped": 0, "reconciled": True}
+        return {"appended": 0, "dropped": 0, "reconciled": reconcile}
     schema = ledger_signatures(batch_df, id_col, text_col, **dedup_kw).schema
     ledger = wh.read(spark, ledger_table, schema=schema)
     survivors, sigs = dedup_ingest_neardup(
         batch_df, ledger, id_col=id_col, text_col=text_col, **dedup_kw
     )
-    lineage = {"run_id": run_id, "epoch": epoch_id}
     meta = wh.write_append(survivors, corpus_table, lineage=lineage)
     wh.write_append(sigs, ledger_table, lineage=lineage)
     n_batch = batch_df.count()
@@ -313,9 +301,4 @@ def ingest_stream(
             **dedup_kw,
         )
 
-    writer = stream.writeStream.foreachBatch(_on_batch).outputMode("append")
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream, _on_batch, checkpoint_dir, trigger_once)
