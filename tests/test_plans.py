@@ -454,12 +454,21 @@ def test_candidate_self_join_is_equi_join(spark, name):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_fingerprint_splits_each_document_once(spark):
-    # the shingles read a staged words column; an inline split(text) would
-    # be copied into each shingle's element_at lookup (O(words²) per doc)
-    df = QUERIES["text_fingerprint"](spark, SF)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
+def _assert_splits_once(spark, name):
+    # the k-grams read a staged words column; an inline split(text) would
+    # be copied into each gram's element_at (or slice) lookup, O(words²)
+    # per doc
+    plan = QUERIES[name](spark, SF)._jdf.queryExecution().optimizedPlan().toString()
     assert "element_at(split(" not in plan, plan
+    assert "slice(split(" not in plan, plan
+
+
+def test_fingerprint_splits_each_document_once(spark):
+    _assert_splits_once(spark, "text_fingerprint")
+
+
+def test_repetition_splits_each_document_once(spark):
+    _assert_splits_once(spark, "text_repetition")
 
 
 def test_log_templates_single_exchange_partial_agg(spark):

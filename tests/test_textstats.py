@@ -69,13 +69,15 @@ def test_repetition_signals_closed_form(spark):
         ("pingpong", "a b a b a"),
         ("single", "solo"),
     ]
-    df = spark.createDataFrame(cases, ["k", "text"])
+    df = spark.createDataFrame(cases, ["k", "text"]).select(
+        "k", F.split("text", " ", -1).alias("w")
+    )
     got = {
         r["k"]: (r["dup"], r["top"])
         for r in df.select(
             "k",
-            dup_ngram_frac(F.col("text"), 2).alias("dup"),
-            top_ngram_frac(F.col("text"), 2).alias("top"),
+            dup_ngram_frac(F.col("w"), 2).alias("dup"),
+            top_ngram_frac(F.col("w"), 2).alias("top"),
         ).collect()
     }
     assert got["loop"] == (0.75, 1.0)
@@ -110,37 +112,39 @@ def test_repetition_query_matches_pandas_recompute(spark):
         assert r["top_bigram_frac"] == (max(c.values()) * 10000 // n) / 10000.0
 
 
-def test_top_ngram_frac_table_paths_agree(spark):
-    """The shuffle path (explode + groupBy + max) and the expression path
-    must compute IDENTICAL top-ngram fractions: random docs spanning both
-    sides of a mid-range threshold, plus sub-k docs (null on both paths)."""
+def test_repetition_signals_match_counter_recompute(spark):
+    """The sorted-run fold against a Python Counter on random docs for
+    k = 2 and 3: empty tokens (double spaces), docs shorter than k (null),
+    a null text, and one 2,000-word doc."""
     import random
+    from collections import Counter
 
-    from watchman_spark.operators.textstats import top_ngram_frac, top_ngram_frac_table
+    from watchman_spark.operators.textstats import dup_ngram_frac, top_ngram_frac
 
     rng = random.Random(7)
-    vocab = ["alpha", "beta", "gamma", "delta", "loop"]
-    rows = []
-    for i in range(60):
-        n = rng.choice([0, 1, 3, 8, 20, 40, 80])
-        words = [rng.choice(vocab) for _ in range(n)]
-        if n >= 10 and i % 3 == 0:
-            words = words[:4] * (n // 4)  # highly repetitive long doc
+    vocab = ["alpha", "beta", "gamma", "delta", "loop", ""]
+    rows = [(0, None), (1, " ".join(rng.choice(vocab) for _ in range(2000)))]
+    for i in range(2, 120):
+        words = [rng.choice(vocab) for _ in range(rng.choice([0, 1, 2, 3, 8, 20, 80]))]
+        if len(words) >= 8 and i % 3 == 0:
+            words = words[:4] * (len(words) // 4)  # highly repetitive doc
         rows.append((i, " ".join(words)))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    expr = {
-        r["doc_id"]: r["f"]
-        for r in df.select("doc_id", top_ngram_frac(F.col("text"), 2).alias("f")).collect()
-    }
-    for thr in (1, 10, 10_000):  # all-shuffle, mixed, all-expression
-        got = {
-            r["doc_id"]: r["f"]
-            for r in top_ngram_frac_table(
-                df, "doc_id", "text", k=2, out_col="f", shuffle_min_tokens=thr
-            ).collect()
-        }
-        assert got == expr, thr
-    # schema contract: appends out_col, preserves every input row
-    out = top_ngram_frac_table(df, "doc_id", "text", shuffle_min_tokens=10)
-    assert out.columns == ["doc_id", "text", "top_ngram_frac"]
-    assert out.count() == len(rows)
+    df = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", "text", F.split("text", " ", -1).alias("w")
+    )
+    for k in (2, 3):
+        got = df.select(
+            "doc_id", "text",
+            dup_ngram_frac(F.col("w"), k).alias("dup"),
+            top_ngram_frac(F.col("w"), k).alias("top"),
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            w = r["text"].split(" ") if r["text"] is not None else []
+            c = Counter(" ".join(w[i : i + k]) for i in range(len(w) - k + 1))
+            n = sum(c.values())
+            want = (None, None) if n == 0 else (
+                ((n - len(c)) * 10000 // n) / 10000.0,
+                (max(c.values()) * 10000 // n) / 10000.0,
+            )
+            assert (r["dup"], r["top"]) == want, (k, r["doc_id"])

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import floor_frac
+
 
 def funnel(
     df: DataFrame,
@@ -96,8 +98,7 @@ def funnel(
         ).alias("r"),
         "_total",
     )
-    num = F.col("r.n_keys") * 10000
-    frac = F.when(F.col("_total") > 0, (num - F.pmod(num, F.col("_total"))) / F.col("_total") / 10000.0).otherwise(
+    frac = F.when(F.col("_total") > 0, floor_frac(F.col("r.n_keys"), F.col("_total"))).otherwise(
         F.lit(0.0)
     )
     return rows.select(
@@ -152,8 +153,7 @@ def retention_cohorts(
     cohort_n = F.max(F.when(F.col("week_offset") == 0, F.col("n_active"))).over(
         Window.partitionBy("cohort_day")
     )
-    num = F.col("n_active") * 10000
-    retention = (num - F.pmod(num, cohort_n)) / cohort_n / 10000.0
+    retention = floor_frac(F.col("n_active"), cohort_n)
     return act.select(
         "cohort_day", "week_offset", "n_active", retention.alias("retention")
     )

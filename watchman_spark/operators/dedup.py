@@ -25,6 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .textstats import floor_frac, ngrams
+
 # Scale-safe DEFAULTS: the naive call must not be quadratic, so the caps
 # are on unless the caller opts out with ``None`` (OPTIMIZATION_r06.md
 # "Dedup (design notes moved from code)"). Sizing: a shingle/bucket key
@@ -108,40 +110,8 @@ def word_shingles(text: Column, k: int) -> Column:
     """Distinct word k-gram shingles of a text column (built-ins only).
     Empty array when the text has fewer than k words. The split is inline,
     so each shingle re-reads it; the dedup paths stage it (_words_staged)."""
-    return _shingles_of_words(F.split(text, " ", -1), k).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
-def _shingles_of_words(words: Column, k: int) -> Column:
-    """Distinct word k-grams from an ALREADY-SPLIT words column. The words
-    argument must be a plain column reference (attribute), never an inline
-    split(...) expression: Catalyst substitutes an inline subtree into the
-    per-element lambda, so every one of the n-k+1 shingle slices would
-    re-split the whole text — O(words²) per document (measured 34s → 8s
-    for the sf1.0 planted corpus when staged; guide §1.2 "per-task work").
-
-    The n >= k guard must live INSIDE the expression even though callers
-    filter short docs out first: InferFiltersFromGenerate adds a
-    size(shingles) > 0 predicate whose common-subexpression can evaluate
-    the transform BEFORE the row filter, and the n < k case would then
-    evaluate a descending sequence / out-of-range element_at — a runtime
-    error, not just waste (OPTIMIZATION_r06.md "Dedup (design notes moved
-    from code)")."""
-    n = F.size(words)
-    return F.when(
-        n >= k,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                # k element_at lookups concat'd directly: measured ~10-35%
-                # faster than concat_ws(slice(...)) (no per-shingle array
-                # allocation), byte-identical output
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(words, i + j) for j in range(k)]
-                ),
-            )
-        ),
+    return F.coalesce(
+        F.array_distinct(ngrams(F.split(text, " ", -1), k)), F.array().cast("array<string>")
     )
 
 
@@ -158,7 +128,7 @@ def _words_staged(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFram
 def shingle_table(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
     """(id, shingle) exploded table — the base for jaccard and minhash."""
     return _words_staged(df, id_col, text_col, k).select(
-        "id", F.explode(_shingles_of_words(F.col("__w"), k)).alias("shingle")
+        "id", F.explode(F.array_distinct(ngrams(F.col("__w"), k))).alias("shingle")
     )
 
 
@@ -170,7 +140,7 @@ def _shingle_arrays(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFr
     dedup paths shuffle candidate PAIRS instead of (pair × shingle)
     exploded rows (optimization guide §2.3/§2.4)."""
     return _words_staged(df, id_col, text_col, k).select(
-        "id", _shingles_of_words(F.col("__w"), k).alias("sh")
+        "id", F.array_distinct(ngrams(F.col("__w"), k)).alias("sh")
     )
 
 
@@ -506,8 +476,7 @@ def sig_est_jaccard(a: Column, b: Column, n_hashes: int) -> Column:
     """MinHash-estimated jaccard: the fraction of equal signature
     components, floor-truncated to 4 dp with integer division (eq/32 lands
     on EXACT binary halves like 0.03125, where round-half conventions
-    differ across engines — the same trick as textstats._frac_10k, inlined
-    here because textstats imports from this module). Standard error is
+    differ across engines — textstats.floor_frac). Standard error is
     ~sqrt(J(1-J)/n_hashes) (~0.09 at n=32, J=0.5) — size n_hashes to the
     fidelity the dedup threshold needs. This is what lets the incremental
     ingest verify candidates WITHOUT the corpus text: the ledger's
@@ -517,8 +486,7 @@ def sig_est_jaccard(a: Column, b: Column, n_hashes: int) -> Column:
         F.lit(0),
         lambda acc, x: acc + x,
     )
-    num = (eq * 10000).cast("long")
-    return (num - F.pmod(num, F.lit(n_hashes))) / F.lit(n_hashes) / F.lit(10000.0)
+    return floor_frac(eq, F.lit(n_hashes))
 
 
 def dedup_ingest_neardup(

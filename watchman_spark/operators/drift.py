@@ -19,7 +19,7 @@ arithmetic — tv = Σ|p_i - q_i|/2 = Σ|n_i·M - m_i·N| / (2·N·M) where
 n_i/m_i are bin counts and N/M side totals. The numerator is a bigint
 (counts ≤ 10^12 × bins keep it well under 2^63 after the per-bin |diff|
 is summed as decimal), so the statistic is bit-identical in any engine
-— the same portability discipline as _frac_10k / sig_est_jaccard.
+— the same portability discipline as textstats.floor_frac.
 PSI (population stability index) is also provided; it needs ln(), whose
 last-ulp rounding is engine-specific, so PSI is pinned by pytest against
 an independent numpy recompute instead of the cross-engine oracle.
@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .textstats import floor_frac
 
 
 def drift_bins(
@@ -90,17 +92,12 @@ def total_variation(bins: DataFrame) -> DataFrame:
         "N",
         "M",
     )
-    num = F.col("tv_num") * 1000000
     den = 2 * F.col("N") * F.col("M")
     return scaled.groupBy("N", "M").agg(F.sum("d").alias("tv_num")).select(
         F.col("tv_num"),
         F.col("N").alias("n_ref_total"),
         F.col("M").alias("n_cur_total"),
-        # integer floor-division, THEN one exact small-int/1e6 division:
-        # both engines derive the identical double from identical bigints
-        # (no floor() over an inexact product — same trick as
-        # dedup.sig_est_jaccard / textstats._frac_10k)
-        ((num - F.pmod(num, den)) / den / F.lit(1000000.0)).alias("tv"),
+        floor_frac(F.col("tv_num"), den, scale=1_000_000).alias("tv"),
     )
 
 

@@ -1,15 +1,16 @@
 """Text analysis for training-data pipelines: language-ID heuristic,
-quality scoring, token counting, document fingerprinting.
+quality scoring, token counting, document fingerprinting, and the text
+operators' one n-gram core — ``ngrams`` (every word k-gram comes from it;
+dedup shingles are its ``array_distinct``), the sorted-run repetition
+fold and ``floor_frac`` (the only exact integer-division ratio).
 
 All pure JVM expressions (codegen-friendly, no Python boundary); each has a
 closed-form DuckDB oracle in queries_text.py."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from .dedup import _shingles_of_words
 
 # tiny per-language stopword lists for the n-gram/stopword heuristic
 STOPWORDS = {
@@ -102,109 +103,90 @@ def quality_score(text: Column) -> Column:
     return F.floor(raw * 10000).cast("double") / 10000
 
 
-def word_ngrams(text: Column, k: int) -> Column:
-    """Word k-grams WITH duplicates (a multiset, unlike
-    dedup.word_shingles which is distinct-only) — repetition signals need
-    the occurrence counts. Empty array below k words."""
-    ws = F.split(text, " ", -1)
-    n = F.size(ws)
-    return F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(0), n - k),
-            lambda i: F.concat_ws(" ", F.slice(ws, i + 1, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-
-
-def _frac_10k(num: Column, den: Column) -> Column:
-    """floor(num*10000/den)/10000 computed with INTEGER division so Spark
+def floor_frac(num: Column, den: Column, scale: int = 10_000) -> Column:
+    """floor(num*scale/den)/scale computed with INTEGER division so Spark
     and any audit engine (DuckDB `//`) agree bit-for-bit: a div b is
     rewritten (a - a mod b) / b — the numerator is then exactly divisible,
     so the double division is exact. Avoids the floor-of-double edge where
-    IEEE rounding can bump a quotient sitting just under an integer."""
-    a = (num * 10000).cast("long")
-    return (a - F.pmod(a, den)) / den / F.lit(10000.0)
+    IEEE rounding can bump a quotient sitting just under an integer.
+    ``num * scale`` is formed in num's type: pass a bigint when it can
+    pass 2^31."""
+    a = (num * scale).cast("long")
+    return (a - F.pmod(a, den)) / den / F.lit(float(scale))
 
 
-def dup_ngram_frac(text: Column, k: int = 2) -> Column:
+def ngrams(words: Column, k: int) -> Column:
+    """Word k-grams WITH duplicates (a multiset; shingles are
+    ``F.array_distinct(ngrams(words, k))``), null below k words. The words
+    argument must be a plain column reference (attribute), never an inline
+    split(...) expression: Catalyst substitutes an inline subtree into the
+    per-element lambda, so every one of the n-k+1 grams would re-split the
+    whole text — O(words²) per document (measured 34s → 8s for the sf1.0
+    planted corpus when staged; guide §1.2 "per-task work").
+
+    The n >= k guard must live INSIDE the expression even though callers
+    filter short docs out first: InferFiltersFromGenerate adds a
+    size(shingles) > 0 predicate whose common-subexpression can evaluate
+    the transform BEFORE the row filter, and the n < k case would then
+    evaluate a descending sequence / out-of-range element_at — a runtime
+    error, not just waste (OPTIMIZATION_r06.md "Dedup (design notes moved
+    from code)")."""
+    n = F.size(words)
+    return F.when(
+        n >= k,
+        F.transform(
+            F.sequence(F.lit(1), n - k + 1),
+            # k element_at lookups concat'd directly: measured ~10-35%
+            # faster than concat_ws(slice(...)) (no per-gram array
+            # allocation), byte-identical output
+            lambda i: F.concat_ws(" ", *[F.element_at(words, i + j) for j in range(k)]),
+        ),
+    )
+
+
+def _gram_runs(words: Column, k: int) -> Column:
+    """struct(n, dist, top) of the word k-grams — occurrences, distinct
+    grams, count of the most frequent gram — in one fold over the SORTED
+    grams, where each gram's occurrences form one run: O(n log n) per
+    document. Null below k words. Counters are bigint, so floor_frac's
+    num·scale cannot overflow on long documents. The optimized plan
+    prints the fold once per field read (10 times in text_repetition), but
+    the copies are shared, not re-run: on 4 cores at sf0.1 (rows x4) both
+    signals read from one fold ran 1.1-1.7 s warm, against 1.6-2.1 s for
+    one fold per signal."""
+    zero = F.struct(
+        *[F.lit(0).cast("long").alias(c) for c in ("n", "dist", "run", "top")],
+        F.lit(None).cast("string").alias("prev"),
+    )
+
+    def step(acc: Column, g: Column) -> Column:
+        same = g == acc["prev"]  # null on the first gram: a new run
+        run = F.when(same, acc["run"] + 1).otherwise(1)
+        return F.struct(
+            (acc["n"] + 1).alias("n"),
+            (acc["dist"] + F.when(same, 0).otherwise(1)).alias("dist"),
+            run.alias("run"),
+            F.greatest(acc["top"], run).alias("top"),
+            g.alias("prev"),
+        )
+
+    return F.aggregate(F.array_sort(ngrams(words, k)), zero, step)
+
+
+def dup_ngram_frac(words: Column, k: int = 2) -> Column:
     """Fraction of word-k-gram occurrences that repeat an earlier one
     (Gopher-style `dup_ngram` repetition signal), truncated to 4 decimals.
-    Null below k words. Pure JVM: size/array_distinct, no Python."""
-    grams = word_ngrams(text, k)
-    n = F.size(grams)
-    return F.when(n > 0, _frac_10k(n - F.size(F.array_distinct(grams)), n))
+    Null below k words. ``words`` is a staged split (see ngrams)."""
+    r = _gram_runs(words, k)
+    return floor_frac(r["n"] - r["dist"], r["n"])
 
 
-def top_ngram_frac(text: Column, k: int = 2) -> Column:
+def top_ngram_frac(words: Column, k: int = 2) -> Column:
     """Fraction of word-k-gram occurrences taken by the single most
     frequent k-gram (Gopher `top_ngram` signal), truncated to 4 decimals.
-    Per-row cost is O(distinct * total) via filter-count over the gram
-    array — fine for typical documents; for very long docs use
-    ``top_ngram_frac_table`` below, which routes them through an
-    explode + groupBy(doc, gram) + max shuffle (linear per-row work)."""
-    grams = word_ngrams(text, k)
-    n = F.size(grams)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(grams),
-            lambda g: F.size(F.filter(grams, lambda x: x == g)),
-        )
-    )
-    return F.when(n > 0, _frac_10k(top, n))
-
-
-# Route a document to the shuffle path when it has at least this many
-# whitespace tokens. Sizing: the expression path is O(distinct * total)
-# comparisons per row — at 10k tokens that is at most 10^8 cheap string
-# equality checks inside one codegen'd task (~low seconds worst case,
-# typically far less because distinct << total in repetitive long docs),
-# while below it the shuffle path's explode would move up to 10k rows per
-# document through an exchange for no benefit. Above the threshold the
-# per-row cost would grow quadratically (a 10^6-token doc → 10^12
-# comparisons in ONE task — the round-4 'What's wrong #1' ceiling), so
-# those rows trade one shuffle for linear work instead.
-TOP_NGRAM_SHUFFLE_MIN_TOKENS = 10_000
-
-
-def top_ngram_frac_table(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 2,
-    out_col: str = "top_ngram_frac",
-    shuffle_min_tokens: int = TOP_NGRAM_SHUFFLE_MIN_TOKENS,
-) -> DataFrame:
-    """``top_ngram_frac`` with the long-document scale path: rows with
-    fewer than ``shuffle_min_tokens`` whitespace tokens evaluate the pure
-    expression (map-side, no shuffle); rows at/above it are exploded to
-    (id, gram), counted per (id, gram), and reduced to max/sum per id —
-    linear per-row work at the cost of one exchange that carries ONLY the
-    long documents' grams. Results are identical on both paths (equality
-    on random docs asserted in tests/test_textstats.py); docs below k
-    words get null either way. Appends ``out_col`` to the input schema."""
-    nw = F.size(F.split(F.col(text_col), " ", -1))
-    is_long = nw >= F.lit(shuffle_min_tokens)
-    short = df.filter(~is_long).withColumn(out_col, top_ngram_frac(F.col(text_col), k))
-    long_rows = df.filter(is_long)
-    stats = (
-        long_rows.select(
-            F.col(id_col), F.explode(word_ngrams(F.col(text_col), k)).alias("gram")
-        )
-        .groupBy(id_col, "gram")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .groupBy(id_col)
-        .agg(F.max("__c").alias("__top"), F.sum("__c").alias("__n"))
-    )
-    long_out = (
-        long_rows.join(stats, id_col, "left")
-        .withColumn(
-            out_col,
-            F.when(F.col("__n") > 0, _frac_10k(F.col("__top"), F.col("__n"))),
-        )
-        .drop("__top", "__n")
-    )
-    return short.unionByName(long_out.select(*short.columns))
+    Null below k words. ``words`` is a staged split (see ngrams)."""
+    r = _gram_runs(words, k)
+    return floor_frac(r["top"], r["n"])
 
 
 def normalize_text(text: Column) -> Column:
@@ -227,9 +209,8 @@ def fingerprint(words: Column, k: int = 5) -> Column:
     """Deterministic document fingerprint: lexicographic min of sha256 over
     word-k-gram shingles (a 1-perm MinHash with a portable hash). Null for
     docs shorter than k words. ``words`` is the document's split words as
-    a STAGED column reference (see dedup._shingles_of_words): an inline
-    split would be re-evaluated inside every shingle."""
-    return F.array_min(F.transform(_shingles_of_words(words, k), lambda s: F.sha2(s, 256)))
+    a STAGED column reference (see ngrams)."""
+    return F.array_min(F.transform(F.array_distinct(ngrams(words, k)), lambda s: F.sha2(s, 256)))
 
 
 def log_template(text: Column) -> Column:

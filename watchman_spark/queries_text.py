@@ -699,57 +699,19 @@ def text_repetition(spark, sf_dir):
     single most frequent bigram takes. A standard corpus-quality gate
     (boilerplate / keyword-stuffed / looping generations score high).
     Pure map-side JVM expressions; integer-division arithmetic keeps the
-    DuckDB oracle bit-identical (see textstats._frac_10k)."""
-    d = t(spark, sf_dir, "documents")
-    txt = F.col("text")
+    DuckDB oracle bit-identical (see textstats.floor_frac). The words are
+    split once; one sorted-run fold (textstats._gram_runs) feeds both."""
+    w = F.col("w")
     return (
-        d.filter(F.size(F.split("text", " ", -1)) >= 2)
+        t(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ", -1).alias("w"))
+        .filter(F.size(w) >= 2)
         .select(
             "doc_id",
-            F.size(textstats.word_ngrams(txt, 2)).cast("long").alias("n_bigrams"),
-            textstats.dup_ngram_frac(txt, 2).alias("dup_bigram_frac"),
-            textstats.top_ngram_frac(txt, 2).alias("top_bigram_frac"),
+            (F.size(w) - 1).cast("long").alias("n_bigrams"),
+            textstats.dup_ngram_frac(w, 2).alias("dup_bigram_frac"),
+            textstats.top_ngram_frac(w, 2).alias("top_bigram_frac"),
         )
-    )
-
-
-@register(
-    "text_repetition_shuffle",
-    """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       bi AS (
-         SELECT doc_id,
-                unnest([array_to_string(w[i:i+1], ' ')
-                        for i in generate_series(1, len(w)-1)]) AS b
-         FROM docs WHERE len(w) >= 2),
-       cnt AS (SELECT doc_id, b, COUNT(*) AS c FROM bi GROUP BY 1, 2),
-       agg AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bigrams,
-                      CAST(MAX(c) AS BIGINT) AS top_c
-               FROM cnt GROUP BY 1)
-       SELECT doc_id, n_bigrams,
-              ((top_c * 10000) // n_bigrams) / 10000.0 AS top_bigram_frac
-       FROM agg""",
-)
-def text_repetition_shuffle(spark, sf_dir):
-    """The long-document SCALE path of the top-ngram repetition signal
-    (round-4 'What's wrong #1'): shuffle_min_tokens=1 forces EVERY doc
-    through the explode + groupBy(doc, gram) + max route, so the driver
-    oracle pins the shuffle path's values against the same SQL the
-    expression path (text_repetition) is checked with — the two paths can
-    never drift. Production uses the default threshold
-    (textstats.TOP_NGRAM_SHUFFLE_MIN_TOKENS), routing only pathological
-    docs through the exchange."""
-    d = (
-        t(spark, sf_dir, "documents")
-        .filter(F.size(F.split("text", " ", -1)) >= 2)
-        .select("doc_id", "text")
-    )
-    out = textstats.top_ngram_frac_table(
-        d, "doc_id", "text", k=2, out_col="top_bigram_frac", shuffle_min_tokens=1
-    )
-    return out.select(
-        "doc_id",
-        F.size(textstats.word_ngrams(F.col("text"), 2)).cast("long").alias("n_bigrams"),
-        "top_bigram_frac",
     )
 
 
@@ -1024,7 +986,7 @@ def alert_stuck_sessions(spark, sf_dir):
         F.count(F.lit(1)).alias("n_events"),
         n_rep.cast("long").alias("n_repeat"),
     )
-    frac = textstats._frac_10k(F.col("n_repeat"), F.col("n_events"))
+    frac = textstats.floor_frac(F.col("n_repeat"), F.col("n_events"))
     return agg.select(
         "user_id", "n_events", "n_repeat",
         frac.alias("repeat_frac"), (frac >= 0.5).alias("stuck"),
@@ -1504,7 +1466,7 @@ def events_transition_matrix(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     tot = F.sum("n").over(Window.partitionBy("prev_type")).cast("long")
-    p = ((F.col("n") * 10000) - F.pmod(F.col("n") * 10000, tot)) / tot / F.lit(10000.0)
+    p = textstats.floor_frac(F.col("n"), tot)
     return pairs.select("prev_type", "event_type", F.col("n").cast("long").alias("n"), p.alias("p"))
 
 
@@ -1665,15 +1627,24 @@ def profile_events(spark, sf_dir):
     return profile_columns(t(spark, sf_dir, "events"), _PROFILE_COLS)
 
 
+_TEMPLATE_LINE_SQL = """regexp_replace(regexp_replace(
+    event_type || ' uid=' || CAST(user_id AS VARCHAR) || ' ' || props,
+    '[0-9a-f]{8,}', '<hex>', 'g'), '[0-9]+', '<n>', 'g')"""
+
+
+def _event_line():
+    """The log line an event renders (type + uid + raw props): the input
+    of template mining. _TEMPLATE_LINE_SQL is its masked oracle twin."""
+    return F.concat(
+        F.col("event_type"), F.lit(" uid="), F.col("user_id").cast("string"),
+        F.lit(" "), F.col("props"),
+    )
+
+
 @register(
     "log_templates",
-    """WITH lines AS (
-         SELECT event_id, user_id,
-                regexp_replace(regexp_replace(
-                    event_type || ' uid=' || CAST(user_id AS VARCHAR)
-                               || ' ' || props,
-                    '[0-9a-f]{8,}', '<hex>', 'g'),
-                  '[0-9]+', '<n>', 'g') AS template
+    f"""WITH lines AS (
+         SELECT event_id, user_id, {_TEMPLATE_LINE_SQL} AS template
          FROM events)
        SELECT template, COUNT(*) AS n,
               COUNT(DISTINCT user_id) AS n_users,
@@ -1690,18 +1661,9 @@ def log_templates(spark, sf_dir):
     map-side JVM regex; the exchange carries n_templates rows. The
     oracle applies the IDENTICAL portable regex chain (global-flag
     regexp_replace in DuckDB ≡ Spark's replace-all default)."""
-    from .operators.textstats import log_template
-
-    ev = t(spark, sf_dir, "events")
-    line = F.concat(
-        F.col("event_type"),
-        F.lit(" uid="),
-        F.col("user_id").cast("string"),
-        F.lit(" "),
-        F.col("props"),
-    )
     return (
-        ev.select("event_id", "user_id", log_template(line).alias("template"))
+        t(spark, sf_dir, "events")
+        .select("event_id", "user_id", textstats.log_template(_event_line()).alias("template"))
         .groupBy("template")
         .agg(
             F.count(F.lit(1)).alias("n"),
@@ -1745,10 +1707,6 @@ def alert_volume_anomaly(spark, sf_dir):
     )
 
 
-_TEMPLATE_LINE_SQL = """regexp_replace(regexp_replace(
-    event_type || ' uid=' || CAST(user_id AS VARCHAR) || ' ' || props,
-    '[0-9a-f]{8,}', '<hex>', 'g'), '[0-9]+', '<n>', 'g')"""
-
 # fixed calendar split for the drift slices — the events table spans
 # January 2024; a monitor compares "last window" vs "the one before it",
 # and a constant boundary keeps both engines' slices identical by
@@ -1790,17 +1748,10 @@ def drift_template_tv(spark, sf_dir):
     arithmetic as drift_doclen_tv; the exchange carries n_templates rows
     per side."""
     from .operators.drift import drift_cat_bins, total_variation
-    from .operators.textstats import log_template
 
-    ev = t(spark, sf_dir, "events")
-    line = F.concat(
-        F.col("event_type"),
-        F.lit(" uid="),
-        F.col("user_id").cast("string"),
-        F.lit(" "),
-        F.col("props"),
+    lines = t(spark, sf_dir, "events").select(
+        "ts", textstats.log_template(_event_line()).alias("template")
     )
-    lines = ev.select(F.col("ts"), log_template(line).alias("template"))
     split = F.lit(_DRIFT_SPLIT_TS).cast("timestamp")
     bins = drift_cat_bins(
         lines.filter(F.col("ts") < split),

@@ -346,8 +346,7 @@ class ParquetWarehouse:
 
     @staticmethod
     def _count_rows(data_dir: str) -> int:
-        ds = pa_ds.dataset(data_dir, format="parquet", partitioning="hive")
-        return sum(f.metadata.num_rows for f in ds.get_fragments())
+        return sum(f["rows"] for f in file_stats(data_dir, []))
 
     def plan_pruned(
         self,
@@ -763,24 +762,18 @@ class ParquetWarehouse:
         self, spark: SparkSession, table: str, snapshot: int | None = None
     ) -> DataFrame:
         """Per-file inventory of the snapshot (Iceberg's ``table.files``
-        analogue): commit id, relative path, rows, bytes. Prefers the
-        bounds/rows already recorded in commit metadata; falls back to one
-        footer read per file for commits written without stats. Driver
-        cost O(live files) — an introspection/maintenance surface (small-
-        file monitoring, compaction triggers), not a query path."""
+        analogue): commit id, relative path, rows, bytes — one footer read
+        per file (file_stats) plus its size. Driver cost O(live files) —
+        an introspection/maintenance surface (small-file monitoring,
+        compaction triggers), not a query path."""
         out = []
         for c in self._effective(self.commits(table), snapshot):
             d = os.path.join(self.root, c["data_dir"])
-            ds = pa_ds.dataset(d, format="parquet", partitioning="hive")
-            for frag in ds.get_fragments():
-                out.append(
-                    {
-                        "commit_id": c["id"],
-                        "path": os.path.relpath(frag.path, d),
-                        "rows": frag.metadata.num_rows,
-                        "bytes": os.path.getsize(frag.path),
-                    }
-                )
+            out += [
+                {"commit_id": c["id"], "path": f["path"], "rows": f["rows"],
+                 "bytes": os.path.getsize(os.path.join(d, f["path"]))}
+                for f in file_stats(d, [])
+            ]
         return spark.createDataFrame(
             out, schema="commit_id long, path string, rows long, bytes long"
         )
