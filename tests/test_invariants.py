@@ -244,3 +244,37 @@ def test_builtin_digest_equals_grouped_map(spark):
     )
     assert new.exceptAll(old).count() == 0
     assert old.exceptAll(new).count() == 0
+
+
+def test_conv_digest_null_ts_matches_oracle(spark, tmp_path):
+    """udf_conv_digest orders a null ts after every timestamp, as the
+    oracle's ORDER BY ts does (Spark's array_sort alone puts it first),
+    and skips a null event_type like string_agg."""
+    import duckdb
+    import pandas as pd
+
+    from watchman_spark.queries import oracle_sql
+    from watchman_spark.queries_fn import udf_conv_digest
+
+    ts = pd.to_datetime(
+        ["2024-01-01 00:00", None, "2024-01-01 02:00", "2024-01-01 01:00",
+         "2024-01-01 03:00", None]
+    ).astype("datetime64[us]")
+    pd.DataFrame({
+        "event_id": [1, 2, 3, 4, 5, 6],
+        "ts": ts,
+        "user_id": [7, 7, 7, 8, 8, 8],
+        "event_type": ["click", "error", "view", "signup", None, "purchase"],
+        "value": [0.0] * 6,
+        "props": ["{}"] * 6,
+    }).to_parquet(tmp_path / "events.parquet")
+
+    got = udf_conv_digest(spark, str(tmp_path)).toPandas()
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    want = con.execute(oracle_sql()["udf_conv_digest"]).df()
+    con.close()
+    key = lambda df: sorted(zip(df["user_id"], df["digest"], df["n"]))  # noqa: E731
+    assert key(got) == key(want)

@@ -44,6 +44,11 @@ def _hex_prefix(key: Column) -> Column:
     return F.substring(F.md5(key.cast("string").cast("binary")), 1, HEX_WIDTH)
 
 
+def hex_prefix_sql(key_sql: str) -> str:
+    """The ANSI-SQL twin of _hex_prefix (the DuckDB oracles' bucket)."""
+    return f"substr(md5(CAST({key_sql} AS VARCHAR)), 1, {HEX_WIDTH})"
+
+
 def frac_to_hex_threshold(frac: float) -> str:
     """The string t such that P[hex_prefix < t] = round(frac*2^16)/2^16.
 
@@ -105,7 +110,7 @@ def stratified_sql(
         for name, f in fracs.items()
     )
     case = f"CASE {arms} ELSE '{frac_to_hex_threshold(default_frac)}' END"
-    return f"substr(md5(CAST({key_sql} AS VARCHAR)), 1, {HEX_WIDTH}) < {case}"
+    return f"{hex_prefix_sql(key_sql)} < {case}"
 
 
 def _hash32(key: Column) -> Column:
@@ -113,13 +118,17 @@ def _hash32(key: Column) -> Column:
     [0, 2^32): the portable uniform for DATA-DEPENDENT thresholds (the
     hex-prefix string compare above needs a compile-time threshold; a
     target derived from corpus totals doesn't have one). Engine-exact:
-    ``conv(substr(md5(k),1,8),16,10)`` in Spark ≡
-    ``('0x'||substr(md5(k),1,8))::BIGINT`` in DuckDB (verified
-    value-identical)."""
+    ``conv(substr(md5(k),1,8),16,10)`` in Spark ≡ hash32_sql in DuckDB
+    (verified value-identical)."""
     return (
         F.conv(F.substring(F.md5(key.cast("string").cast("binary")), 1, 8), 16, 10)
         .cast("bigint")
     )
+
+
+def hash32_sql(key_sql: str) -> str:
+    """The DuckDB twin of _hash32: the hex digits parsed as a bigint."""
+    return f"('0x' || substr(md5(CAST({key_sql} AS VARCHAR)), 1, 8))::BIGINT"
 
 
 def source_mix_exact(
@@ -209,7 +218,7 @@ def split_boundaries_sql(key_sql: str, splits: dict[str, float]) -> str:
     """The ANSI-SQL CASE expression equivalent to with_split — shared with
     the DuckDB oracle so Spark and the oracle can never disagree on
     thresholds."""
-    prefix = f"substr(md5(CAST({key_sql} AS VARCHAR)), 1, {HEX_WIDTH})"
+    prefix = hex_prefix_sql(key_sql)
     names = list(splits)
     acc = 0.0
     arms = []

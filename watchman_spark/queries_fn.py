@@ -282,23 +282,22 @@ def udf_grok_parse(spark, sf_dir):
        FROM events GROUP BY user_id""",
 )
 def udf_conv_digest(spark, sf_dir):
-    # r6 (guide §4.1 "prefer built-in aggregations ... over
-    # groupBy().applyInPandas, which ship every row"): the ordered-sequence
-    # digest is exactly expressible with built-ins —
-    # array_sort(collect_list(struct(ts, event_id, event_type))) sorts by
-    # (ts, event_id) (event_id is unique, so the struct order equals the
-    # ORDER BY), transform projects the event_type sequence, and
-    # sha2(array_join(...), 256) is byte-identical to Python's
-    # sha256(",".join(...)).hexdigest(). Fully JVM + map-side partial
-    # collect_list vs one Python round-trip per group: measured 4.22s →
-    # 0.25s (17x) at sf1.0/32 cores, exceptAll-identical rows. The REAL
-    # grouped-map applyInPandas canonicalization operator (SURVEY U3)
-    # remains operators/invariants.py conv_digests (+ chunked variant),
-    # pytested in tests/test_invariants.py.
+    # Built-in aggregation, not applyInPandas (which ships every row to
+    # Python; measured in OPTIMIZATION_r06.md §1): array_sort over
+    # struct(ts IS NULL, ts, event_id, event_type) orders by (ts NULLS
+    # LAST, event_id) like the oracle's ORDER BY (event_id is unique),
+    # transform projects the event_type sequence, and sha2(array_join(...),
+    # 256) is byte-identical to Python's sha256(",".join(...)).hexdigest().
+    # Null contract: a null ts sorts after every timestamp; a null
+    # event_type is skipped (array_join and string_agg both drop it); a
+    # user whose event_types are all null digests sha256("") here and NULL
+    # in DuckDB. The grouped-map applyInPandas operator (SURVEY U3) remains
+    # operators/invariants.py conv_digests, pytested in
+    # tests/test_invariants.py.
     ev = t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
+    key = F.struct(F.col("ts").isNull().alias("ts_null"), "ts", "event_id", "event_type")
     ordered = F.transform(
-        F.array_sort(F.collect_list(F.struct("ts", "event_id", "event_type"))),
-        lambda s: s["event_type"],
+        F.array_sort(F.collect_list(key)), lambda s: s["event_type"]
     )
     return ev.groupBy("user_id").agg(
         F.sha2(F.array_join(ordered, ","), 256).alias("digest"),

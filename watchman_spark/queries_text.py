@@ -32,10 +32,9 @@ from .queries import register, t
 
 # documents with planted duplicates (derived purely from the driver table,
 # deterministic): full copies of doc_id % 7 == 0 under shifted ids.
-_PLANTED_SQL = """(SELECT doc_id, text FROM documents
-                   UNION ALL
-                   SELECT doc_id + 100000 AS doc_id, text
-                   FROM documents WHERE doc_id % 7 = 0)"""
+_COPIES_SQL = """(SELECT doc_id + 100000 AS doc_id, text
+                  FROM documents WHERE doc_id % 7 = 0)"""
+_PLANTED_SQL = f"(SELECT doc_id, text FROM documents UNION ALL SELECT * FROM {_COPIES_SQL})"
 
 
 def _planted(spark, sf_dir):
@@ -67,32 +66,65 @@ def dedup_exact(spark, sf_dir):
 # join fans out quadratically); 8-grams keep candidate generation
 # near-linear while planted duplicates still score jaccard 1.0
 _SHINGLE_K = 8
-_SHINGLE_CTE = f"""
-  docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM {{base}}),
-  sets AS (
-    SELECT DISTINCT doc_id, shingle FROM (
-      SELECT doc_id,
-             unnest(list_distinct([array_to_string(w[i:i+{_SHINGLE_K - 1}], ' ')
-                    for i in generate_series(1, len(w)-{_SHINGLE_K - 1})])) AS shingle
-      FROM docs WHERE len(w) >= {_SHINGLE_K})),
-  sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sets GROUP BY doc_id)
-"""
 
 
-@register(
-    "dedup_ngram_jaccard",
-    f"""WITH {_SHINGLE_CTE.format(base=_PLANTED_SQL)},
-        shared AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-          FROM sets a JOIN sets b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2)
-        SELECT id_a, id_b,
-               round(shared * 1.0 / (sa.n_sh + sb.n_sh - shared), 4) AS jaccard
-        FROM shared
-        JOIN sizes sa ON sa.doc_id = id_a
-        JOIN sizes sb ON sb.doc_id = id_b
-        WHERE round(shared * 1.0 / (sa.n_sh + sb.n_sh - shared), 4) >= 0.8""",
-)
+def _grams_sql(k: int) -> str:
+    """The word-k-grams of the words list ``w``, in order: the DuckDB twin
+    of textstats.ngrams (callers keep only rows with len(w) >= k)."""
+    return f"[array_to_string(w[i:i+{k - 1}], ' ') for i in generate_series(1, len(w)-{k - 1})]"
+
+
+def _sets_sql(name: str, base: str, carry: str = "") -> str:
+    """CTE ``name``: the distinct (doc_id{carry}, shingle) rows of the
+    texts in ``base`` (dedup.word_shingles at k = _SHINGLE_K)."""
+    return f"""{name} AS (SELECT DISTINCT doc_id{carry}, shingle FROM (
+          SELECT doc_id{carry}, unnest(list_distinct({_grams_sql(_SHINGLE_K)})) AS shingle
+          FROM (SELECT doc_id{carry}, string_split(text, ' ') AS w FROM {base})
+          WHERE len(w) >= {_SHINGLE_K}))"""
+
+
+# the planted corpus's shingle sets and per-doc set sizes
+_PLANTED_SETS_SQL = f"""{_sets_sql("sets", _PLANTED_SQL)},
+        sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sets GROUP BY doc_id)"""
+
+
+def _pairs_sql(shared: str) -> str:
+    """CTEs ``shared`` (the given body: id_a, id_b and their shared
+    shingle count) and ``pairs``: the pairs whose set jaccard, rounded
+    to 4 dp, is at least 0.8."""
+    return f"""shared AS ({shared}),
+        pairs AS (
+          SELECT id_a, id_b,
+                 round(shared * 1.0 / (sa.n_sh + sb.n_sh - shared), 4) AS jaccard
+          FROM shared JOIN sizes sa ON sa.doc_id = id_a JOIN sizes sb ON sb.doc_id = id_b
+          WHERE jaccard >= 0.8)"""
+
+
+# every planted pair at jaccard >= 0.8, counted by the exact shingle self-join
+_EXACT_PAIRS_SQL = f"""{_PLANTED_SETS_SQL}, {_pairs_sql(
+    "SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared FROM sets a "
+    "JOIN sets b ON a.shingle = b.shingle AND a.doc_id < b.doc_id GROUP BY 1, 2")}"""
+
+
+def _minhash_sql(sets: str, p: str = "") -> str:
+    """CTEs ``{p}sig`` (32 md5 min-hashes per doc of ``sets``) and
+    ``{p}band`` (4 bands of 8, each one md5 digest): the portable
+    signatures and band digests of minhash_signatures(portable=True)."""
+    return f"""{p}sig AS (
+          SELECT doc_id, t.i AS i, MIN(md5(CAST(t.i AS VARCHAR) || '|' || shingle)) AS h
+          FROM {sets} CROSS JOIN generate_series(0, 31) t(i) GROUP BY doc_id, t.i),
+        {p}band AS (
+          SELECT doc_id, i // 8 AS band, md5(string_agg(h, '|' ORDER BY i)) AS digest
+          FROM {p}sig GROUP BY doc_id, i // 8)"""
+
+
+def _floor_frac_sql(num: str, den: str) -> str:
+    """textstats.floor_frac's DuckDB twin: num/den floored to 4 dp in
+    exact integer arithmetic."""
+    return f"(({num} * 10000) // {den}) / 10000.0"
+
+
+@register("dedup_ngram_jaccard", f"WITH {_EXACT_PAIRS_SQL} SELECT * FROM pairs")
 def dedup_ngram_jaccard(spark, sf_dir):
     # max_df=None: the DuckDB oracle computes exact full-set jaccard, so the
     # Spark side opts out of the (default-on) scale cap explicitly here
@@ -120,32 +152,16 @@ def dedup_minhash_lsh(spark, sf_dir):
 # minhash). The xxhash64 fast path above stays the production default.
 @register(
     "dedup_minhash_lsh_portable",
-    f"""WITH {_SHINGLE_CTE.format(base=_PLANTED_SQL)},
-        sig AS (
-          SELECT doc_id, t.i AS i,
-                 MIN(md5(CAST(t.i AS VARCHAR) || '|' || shingle)) AS h
-          FROM sets CROSS JOIN generate_series(0, 31) t(i)
-          GROUP BY doc_id, t.i),
-        band AS (
-          SELECT doc_id, i // 8 AS band,
-                 md5(string_agg(h, '|' ORDER BY i)) AS digest
-          FROM sig GROUP BY doc_id, i // 8),
+    f"""WITH {_PLANTED_SETS_SQL}, {_minhash_sql("sets")},
         cand AS (
           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
           FROM band a JOIN band b
             ON a.band = b.band AND a.digest = b.digest AND a.doc_id < b.doc_id),
-        shared AS (
-          SELECT c.id_a, c.id_b, COUNT(*) AS shared
-          FROM cand c
-          JOIN sets sa ON sa.doc_id = c.id_a
-          JOIN sets sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle
-          GROUP BY 1, 2)
-        SELECT id_a, id_b,
-               round(shared * 1.0 / (za.n_sh + zb.n_sh - shared), 4) AS jaccard
-        FROM shared
-        JOIN sizes za ON za.doc_id = id_a
-        JOIN sizes zb ON zb.doc_id = id_b
-        WHERE round(shared * 1.0 / (za.n_sh + zb.n_sh - shared), 4) >= 0.8""",
+        {_pairs_sql(
+            "SELECT c.id_a, c.id_b, COUNT(*) AS shared FROM cand c "
+            "JOIN sets sa ON sa.doc_id = c.id_a "
+            "JOIN sets sb ON sb.doc_id = c.id_b AND sb.shingle = sa.shingle GROUP BY 1, 2")}
+        SELECT * FROM pairs""",
 )
 def dedup_minhash_lsh_portable(spark, sf_dir):
     # max_bucket=None: the oracle has no cap — exact candidate semantics
@@ -156,41 +172,16 @@ def dedup_minhash_lsh_portable(spark, sf_dir):
     )
 
 
-# The incremental-ingest MATCH step (round-5): batch band digests LSH-join
-# a corpus signature LEDGER and candidates are verified by the
-# signature-ESTIMATED jaccard (the ledger has no shingles) — here on md5
-# primitives so DuckDB re-derives both sides' signatures, the band join,
-# and the estimate bit-identically. The planted +100000 copies play the
-# "new batch"; the raw documents table plays the committed corpus.
+# The incremental-ingest MATCH step: batch band digests LSH-join a corpus
+# signature LEDGER and candidates are verified by the signature-ESTIMATED
+# jaccard (the ledger has no shingles) — here on md5 primitives so DuckDB
+# re-derives both sides' signatures, the band join, and the estimate
+# bit-identically. The planted +100000 copies play the "new batch"; the
+# raw documents table plays the committed corpus.
 @register(
     "dedup_ingest_match_portable",
-    f"""WITH cd AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        cset AS (SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 unnest(list_distinct([array_to_string(w[i:i+{_SHINGLE_K - 1}], ' ')
-                        for i in generate_series(1, len(w)-{_SHINGLE_K - 1})])) AS shingle
-          FROM cd WHERE len(w) >= {_SHINGLE_K})),
-        bd AS (SELECT doc_id + 100000 AS doc_id, string_split(text, ' ') AS w
-               FROM documents WHERE doc_id % 7 = 0),
-        bset AS (SELECT DISTINCT doc_id, shingle FROM (
-          SELECT doc_id,
-                 unnest(list_distinct([array_to_string(w[i:i+{_SHINGLE_K - 1}], ' ')
-                        for i in generate_series(1, len(w)-{_SHINGLE_K - 1})])) AS shingle
-          FROM bd WHERE len(w) >= {_SHINGLE_K})),
-        csig AS (SELECT doc_id, t.i AS i,
-                        MIN(md5(CAST(t.i AS VARCHAR) || '|' || shingle)) AS h
-                 FROM cset CROSS JOIN generate_series(0, 31) t(i)
-                 GROUP BY doc_id, t.i),
-        bsig AS (SELECT doc_id, t.i AS i,
-                        MIN(md5(CAST(t.i AS VARCHAR) || '|' || shingle)) AS h
-                 FROM bset CROSS JOIN generate_series(0, 31) t(i)
-                 GROUP BY doc_id, t.i),
-        cband AS (SELECT doc_id, i // 8 AS band,
-                         md5(string_agg(h, '|' ORDER BY i)) AS digest
-                  FROM csig GROUP BY doc_id, i // 8),
-        bband AS (SELECT doc_id, i // 8 AS band,
-                         md5(string_agg(h, '|' ORDER BY i)) AS digest
-                  FROM bsig GROUP BY doc_id, i // 8),
+    f"""WITH {_sets_sql("cset", "documents")}, {_sets_sql("bset", _COPIES_SQL)},
+        {_minhash_sql("cset", "c")}, {_minhash_sql("bset", "b")},
         cand AS (SELECT DISTINCT b.doc_id AS batch_id, c.doc_id AS corpus_id
                  FROM bband b JOIN cband c
                    ON b.band = c.band AND b.digest = c.digest),
@@ -201,9 +192,8 @@ def dedup_minhash_lsh_portable(spark, sf_dir):
                 JOIN bsig bs ON bs.doc_id = cand.batch_id
                 JOIN csig cs ON cs.doc_id = cand.corpus_id AND cs.i = bs.i
                 GROUP BY 1, 2)
-        SELECT batch_id, corpus_id,
-               ((eq * 10000) // 32) / 10000.0 AS est_jaccard
-        FROM est WHERE ((eq * 10000) // 32) / 10000.0 >= 0.8""",
+        SELECT batch_id, corpus_id, {_floor_frac_sql("eq", "32")} AS est_jaccard
+        FROM est WHERE est_jaccard >= 0.8""",
 )
 def dedup_ingest_match_portable(spark, sf_dir):
     from .operators.dedup import _ingest_matches, minhash_signatures
@@ -242,16 +232,7 @@ def dedup_simhash(spark, sf_dir):
 # proves matches the Spark pair set exactly.
 @register(
     "dedup_resolve",
-    f"""WITH RECURSIVE {_SHINGLE_CTE.format(base=_PLANTED_SQL)},
-        shared AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS shared
-          FROM sets a JOIN sets b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-          GROUP BY 1, 2),
-        pairs AS (
-          SELECT id_a, id_b FROM shared
-          JOIN sizes sa ON sa.doc_id = id_a
-          JOIN sizes sb ON sb.doc_id = id_b
-          WHERE round(shared * 1.0 / (sa.n_sh + sb.n_sh - shared), 4) >= 0.8),
+    f"""WITH RECURSIVE {_EXACT_PAIRS_SQL},
         edges AS (SELECT id_a AS s, id_b AS d FROM pairs
                   UNION SELECT id_b, id_a FROM pairs),
         reach(s, d) AS (
@@ -289,21 +270,35 @@ def dedup_simhash_portable(spark, sf_dir):
     return d.select("doc_id", simhash64_portable(F.col("text")).alias("sim"))
 
 
-_COS_SQL = """round(
-    list_dot_product(a.v, b.v)
-    / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4)"""
+# the embeddings as DOUBLE lists: every vector oracle's input
+_VEC_SQL = "v AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)"
+
+
+def _cos_sql(x: str, y: str) -> str:
+    """The cosine of two DOUBLE lists rounded to 4 dp, as every vector
+    operator returns it (similarity.cosine_staged's DuckDB twin)."""
+    return (
+        f"round(list_dot_product({x}, {y}) / (sqrt(list_dot_product({x}, {x}))"
+        f" * sqrt(list_dot_product({y}, {y}))), 4)"
+    )
+
+
+# within-label cosine near-duplicates: at 0.9 the pair set is empty at
+# sf0.001-sf0.1 (the largest in-block cosine there is 0.45-0.51), so the
+# oracle would only ever compare an empty result; 0.3 keeps real pairs
+_DUP_COS = 0.3
 
 
 @register(
     "dedup_embedding_cosine",
-    f"""WITH v AS (SELECT label, vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-        SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_COS_SQL} AS cos_sim
+    f"""WITH {_VEC_SQL}
+        SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_cos_sql("a.v", "b.v")} AS cos_sim
         FROM v a JOIN v b ON a.label = b.label AND a.vec_id < b.vec_id
-        WHERE {_COS_SQL} >= 0.9""",
+        WHERE cos_sim >= {_DUP_COS}""",
 )
 def dedup_embedding_cosine(spark, sf_dir):
     return cosine_pairs_blocked(
-        t(spark, sf_dir, "embeddings"), block_col="label", threshold=0.9
+        t(spark, sf_dir, "embeddings"), block_col="label", threshold=_DUP_COS
     )
 
 
@@ -313,12 +308,8 @@ def dedup_embedding_cosine(spark, sf_dir):
 
 @register(
     "ann_brute_force",
-    f"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        q AS (SELECT v AS qv FROM v WHERE vec_id = 0)
-        SELECT a.vec_id,
-               round(list_dot_product(a.v, q.qv)
-                     / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(q.qv, q.qv))),
-                     4) AS cos_sim
+    f"""WITH {_VEC_SQL}, q AS (SELECT v AS qv FROM v WHERE vec_id = 0)
+        SELECT a.vec_id, {_cos_sql("a.v", "q.qv")} AS cos_sim
         FROM v a, q
         ORDER BY cos_sim DESC, a.vec_id LIMIT 20""",
 )
@@ -330,7 +321,7 @@ def ann_brute_force(spark, sf_dir):
 
 # int8 quantization CTE shared by the two quantized-embedding oracles:
 # per-vector symmetric scalar quantization, the CASE guarding all-zero vecs
-_QUANT_SQL = """v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+_QUANT_SQL = f"""{_VEC_SQL},
         m AS (SELECT vec_id, v,
                      list_max(list_transform(v, x -> abs(x))) AS maxabs
               FROM v),
@@ -373,10 +364,7 @@ def emb_quantize(spark, sf_dir):
                      list_transform(qv, x -> CAST(x AS DOUBLE)) AS qd
               FROM q),
         qq AS (SELECT qd AS queryv FROM d WHERE vec_id = 0)
-        SELECT d.vec_id,
-               round(list_dot_product(d.qd, queryv)
-                     / (sqrt(list_dot_product(d.qd, d.qd))
-                        * sqrt(list_dot_product(queryv, queryv))), 4) AS cos_sim
+        SELECT d.vec_id, {_cos_sql("d.qd", "queryv")} AS cos_sim
         FROM d, qq
         ORDER BY cos_sim DESC, d.vec_id LIMIT 20""",
 )
@@ -415,22 +403,33 @@ def _lsh_bucket_sql(vec_sql: str, dim: int, n_planes: int) -> str:
     return " + ".join(terms)
 
 
-@register(
-    "ann_lsh",
-    f"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {_lsh_bucket_sql('v', 64, 4)} AS bkt FROM v),
+# the vectors with their 4-plane bucket (lsh_bucket at dim 64)
+_BKT_SQL = f"""{_VEC_SQL},
+        b AS (SELECT vec_id, v, {_lsh_bucket_sql("v", 64, 4)} AS bkt FROM v)"""
+
+
+def _probes_sql(probes: int) -> str:
+    """The buckets lsh_topk scores for query bucket ``qbkt``: itself, and
+    with probes=1 each one-bit flip of it."""
+    flips = [f"xor(qbkt, {1 << p})" for p in range(4)] if probes else []
+    return ", ".join(["qbkt", *flips])
+
+
+def _lsh_topk_sql(probes: int) -> str:
+    """lsh_topk's oracle: the top 20 by cosine to vector 0 over the
+    probed buckets."""
+    return f"""WITH {_BKT_SQL},
         q AS (SELECT bkt AS qbkt, v AS q FROM b WHERE vec_id = 0)
-        SELECT b.vec_id AS vec_id,
-               round(list_dot_product(b.v, q.q)
-                     / (sqrt(list_dot_product(b.v, b.v))
-                        * sqrt(list_dot_product(q.q, q.q))), 4) AS cos_sim
-        FROM b, q WHERE b.bkt = q.qbkt
-        ORDER BY cos_sim DESC, vec_id LIMIT 20""",
-)
+        SELECT b.vec_id AS vec_id, {_cos_sql("b.v", "q.q")} AS cos_sim
+        FROM b, q WHERE b.bkt IN ({_probes_sql(probes)})
+        ORDER BY cos_sim DESC, vec_id LIMIT 20"""
+
+
+@register("ann_lsh", _lsh_topk_sql(0))
 def ann_lsh(spark, sf_dir):
-    """Oracled since round 3: the sign-projection planes are now literal
-    ±1 arrays from a portable hashlib derivation (plane_signs), so the
-    oracle reproduces bucket membership exactly instead of rows-only."""
+    """The sign-projection planes are literal ±1 arrays from a portable
+    hashlib derivation (plane_signs), so the oracle reproduces bucket
+    membership exactly."""
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
     # 4 planes = 16 buckets: sized so a bucket holds ~1/16 of the corpus —
@@ -449,26 +448,12 @@ def ann_ivf(spark, sf_dir):
     return ivf_topk(emb, q, k=20, n_centroids=8, nprobe=4)
 
 
-@register(
-    "ann_lsh_multiprobe",
-    f"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {_lsh_bucket_sql('v', 64, 4)} AS bkt FROM v),
-        q AS (SELECT bkt AS qbkt, v AS q FROM b WHERE vec_id = 0)
-        SELECT b.vec_id AS vec_id,
-               round(list_dot_product(b.v, q.q)
-                     / (sqrt(list_dot_product(b.v, b.v))
-                        * sqrt(list_dot_product(q.q, q.q))), 4) AS cos_sim
-        FROM b, q
-        WHERE b.bkt IN (q.qbkt, xor(q.qbkt, 1), xor(q.qbkt, 2),
-                        xor(q.qbkt, 4), xor(q.qbkt, 8))
-        ORDER BY cos_sim DESC, vec_id LIMIT 20""",
-)
+@register("ann_lsh_multiprobe", _lsh_topk_sql(1))
 def ann_lsh_multiprobe(spark, sf_dir):
     # Hamming-1 multi-probe: scores the query bucket plus each one-bit-flip
     # neighbor bucket — recall vs brute force is asserted >=0.9 in
     # tests/test_similarity.py; cost stays one broadcast hash join.
-    # Oracled since round 3 (portable plane literals): the probe set is the
-    # explicit XOR list in the oracle's IN clause.
+    # The oracle's probe set is the explicit XOR list of _probes_sql.
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
     return lsh_topk(emb, q, dim=64, k=20, n_planes=4, probes=1)
@@ -487,16 +472,9 @@ _DECON_THR = sampling.frac_to_hex_threshold(0.9)
     "text_decontaminate",
     f"""WITH split AS (
           SELECT doc_id, text,
-                 substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) < '{_DECON_THR}'
-                   AS is_train
+                 {sampling.hex_prefix_sql("doc_id")} < '{_DECON_THR}' AS is_train
           FROM documents),
-        docs AS (SELECT doc_id, is_train, string_split(text, ' ') AS w FROM split),
-        sets AS (
-          SELECT DISTINCT doc_id, is_train, shingle FROM (
-            SELECT doc_id, is_train,
-                   unnest(list_distinct([array_to_string(w[i:i+{_SHINGLE_K - 1}], ' ')
-                          for i in generate_series(1, len(w)-{_SHINGLE_K - 1})])) AS shingle
-            FROM docs WHERE len(w) >= {_SHINGLE_K})),
+        {_sets_sql("sets", "split", ", is_train")},
         tr AS (SELECT DISTINCT shingle FROM sets WHERE is_train),
         te AS (SELECT doc_id, shingle FROM sets WHERE NOT is_train),
         sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM te GROUP BY doc_id),
@@ -507,8 +485,7 @@ _DECON_THR = sampling.frac_to_hex_threshold(0.9)
                COALESCE(h.hits, 0) AS hits,
                COALESCE(CAST(floor(h.hits * 10000.0 / sz.n_sh) AS DOUBLE) / 10000,
                         0.0) AS contam_ratio,
-               COALESCE(CAST(floor(h.hits * 10000.0 / sz.n_sh) AS DOUBLE) / 10000,
-                        0.0) >= 0.2 AS contaminated
+               contam_ratio >= 0.2 AS contaminated
         FROM (SELECT doc_id FROM split WHERE NOT is_train) s
         LEFT JOIN sizes sz ON sz.doc_id = s.doc_id
         LEFT JOIN hits h ON h.doc_id = s.doc_id""",
@@ -545,18 +522,11 @@ def dedup_lsh_clusters(spark, sf_dir):
 # the operator a semantic-dedup / retrieval-mining pipeline actually runs.
 @register(
     "ann_knn_join",
-    f"""WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-        b AS (SELECT vec_id, v, {_lsh_bucket_sql('v', 64, 4)} AS bkt FROM v),
+    f"""WITH {_BKT_SQL},
         q AS (SELECT vec_id AS query_id, v AS q, bkt AS qbkt FROM b WHERE vec_id < 10),
-        probes AS (SELECT query_id, q,
-                          unnest([qbkt, xor(qbkt, 1), xor(qbkt, 2),
-                                  xor(qbkt, 4), xor(qbkt, 8)]) AS bkt
-                   FROM q),
+        probes AS (SELECT query_id, q, unnest([{_probes_sql(1)}]) AS bkt FROM q),
         cand AS (
-          SELECT p.query_id, b.vec_id,
-                 round(list_dot_product(b.v, p.q)
-                       / (sqrt(list_dot_product(b.v, b.v))
-                          * sqrt(list_dot_product(p.q, p.q))), 4) AS cos_sim
+          SELECT p.query_id, b.vec_id, {_cos_sql("b.v", "p.q")} AS cos_sim
           FROM b JOIN probes p ON b.bkt = p.bkt),
         ranked AS (
           SELECT query_id, vec_id, cos_sim,
@@ -618,15 +588,17 @@ def text_lang_id(spark, sf_dir):
     return d.select("doc_id", "lang", textstats.lang_guess(F.col("text")).alias("lang_guess"))
 
 
-@register(
-    "text_quality",
-    f"""SELECT doc_id,
-              CAST(length(text) AS BIGINT) AS n_chars_q,
-              CAST(floor((
+# textstats.quality_score's DuckDB twin, floor-truncated to 4 dp
+_QUALITY_SQL = f"""CAST(floor((
                 0.5 * least(length(text) / 400.0, 1.0)
                 + 0.5 * ({_sw_sql('en')} * 1.0 / len(string_split(lower(text), ' ')))
                 - (length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) * 1.0 / length(text))
-              ) * 10000) AS DOUBLE) / 10000 AS quality
+              ) * 10000) AS DOUBLE) / 10000"""
+
+
+@register(
+    "text_quality",
+    f"""SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars_q, {_QUALITY_SQL} AS quality
        FROM documents""",
 )
 def text_quality(spark, sf_dir):
@@ -657,11 +629,8 @@ def text_tokens(spark, sf_dir):
 
 @register(
     "text_fingerprint",
-    """SELECT doc_id,
-              list_min(list_transform(
-                list_distinct([array_to_string(w[i:i+4], ' ')
-                               for i in generate_series(1, len(w)-4)]),
-                s -> sha256(s))) AS fp
+    f"""SELECT doc_id,
+              list_min(list_transform(list_distinct({_grams_sql(5)}), s -> sha256(s))) AS fp
        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
        WHERE len(w) >= 5""",
 )
@@ -676,21 +645,16 @@ def text_fingerprint(spark, sf_dir):
 
 @register(
     "text_repetition",
-    """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       bi AS (
-         SELECT doc_id,
-                unnest([array_to_string(w[i:i+1], ' ')
-                        for i in generate_series(1, len(w)-1)]) AS b
-         FROM docs WHERE len(w) >= 2),
+    f"""WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       bi AS (SELECT doc_id, unnest({_grams_sql(2)}) AS b FROM docs WHERE len(w) >= 2),
        cnt AS (SELECT doc_id, b, COUNT(*) AS c FROM bi GROUP BY 1, 2),
        agg AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_bigrams,
                       CAST(COUNT(*) AS BIGINT) AS n_dist,
                       CAST(MAX(c) AS BIGINT) AS top_c
                FROM cnt GROUP BY 1)
        SELECT doc_id, n_bigrams,
-              (((n_bigrams - n_dist) * 10000) // n_bigrams) / 10000.0
-                AS dup_bigram_frac,
-              ((top_c * 10000) // n_bigrams) / 10000.0 AS top_bigram_frac
+              {_floor_frac_sql("(n_bigrams - n_dist)", "n_bigrams")} AS dup_bigram_frac,
+              {_floor_frac_sql("top_c", "n_bigrams")} AS top_bigram_frac
        FROM agg""",
 )
 def text_repetition(spark, sf_dir):
@@ -762,11 +726,7 @@ def text_redact_pii(spark, sf_dir):
               CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens
        FROM documents
        WHERE len(string_split(text, ' ')) BETWEEN 5 AND 1000
-         AND CAST(floor((
-                0.5 * least(length(text) / 400.0, 1.0)
-                + 0.5 * ({_sw_sql('en')} * 1.0 / len(string_split(lower(text), ' ')))
-                - (length(regexp_replace(lower(text), '[a-z0-9 ]', '', 'g')) * 1.0 / length(text))
-             ) * 10000) AS DOUBLE) / 10000 >= 0.3
+         AND {_QUALITY_SQL} >= 0.3
          AND {_sw_sql('en')} > 0""",
 )
 def text_quality_filter_chain(spark, sf_dir):
@@ -796,8 +756,7 @@ _SPLITS = {"train": 0.8, "val": 0.1, "test": 0.1}
 @register(
     "sample_hash_det",
     f"""SELECT doc_id FROM documents
-        WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4)
-              < '{sampling.frac_to_hex_threshold(0.1)}'""",
+        WHERE {sampling.hex_prefix_sql("doc_id")} < '{sampling.frac_to_hex_threshold(0.1)}'""",
 )
 def sample_hash_det(spark, sf_dir):
     """Deterministic engine-portable ~10% sample: the md5-hex-prefix
@@ -810,8 +769,7 @@ def sample_hash_det(spark, sf_dir):
 @register(
     "sample_by_unit",
     f"""SELECT event_id, user_id FROM events
-        WHERE substr(md5(CAST(user_id AS VARCHAR)), 1, 4)
-              < '{sampling.frac_to_hex_threshold(0.2)}'""",
+        WHERE {sampling.hex_prefix_sql("user_id")} < '{sampling.frac_to_hex_threshold(0.2)}'""",
 )
 def sample_by_unit(spark, sf_dir):
     """Unit-preserving sampling: keyed on user_id, ALL of a user's events
@@ -924,11 +882,8 @@ def text_len_histogram(spark, sf_dir):
               COUNT(*) AS n,
               CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                    AS BIGINT) AS n_err,
-              CAST(floor(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                         * 10000.0 / COUNT(*)) AS DOUBLE) / 10000 AS err_rate,
-              CAST(floor(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                         * 10000.0 / COUNT(*)) AS DOUBLE) / 10000 >= 0.25
-                AS alert
+              CAST(floor(n_err * 10000.0 / n) AS DOUBLE) / 10000 AS err_rate,
+              err_rate >= 0.25 AS alert
        FROM events GROUP BY 1""",
 )
 def alert_error_rate(spark, sf_dir):
@@ -950,21 +905,22 @@ def alert_error_rate(spark, sf_dir):
     )
 
 
+# each event with its user's previous event_type (in (ts, event_id) order)
+_PREV_SQL = """seq AS (
+         SELECT user_id, event_type,
+                lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
+         FROM events)"""
+
+
 @register(
     "alert_stuck_sessions",
-    """WITH seq AS (
-         SELECT user_id, event_type,
-                lag(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS prev
-         FROM events)
+    f"""WITH {_PREV_SQL}
        SELECT user_id,
               COUNT(*) AS n_events,
               CAST(SUM(CASE WHEN event_type = prev THEN 1 ELSE 0 END)
                    AS BIGINT) AS n_repeat,
-              ((SUM(CASE WHEN event_type = prev THEN 1 ELSE 0 END) * 10000)
-                 // COUNT(*)) / 10000.0 AS repeat_frac,
-              ((SUM(CASE WHEN event_type = prev THEN 1 ELSE 0 END) * 10000)
-                 // COUNT(*)) / 10000.0 >= 0.5 AS stuck
+              {_floor_frac_sql("n_repeat", "n_events")} AS repeat_frac,
+              repeat_frac >= 0.5 AS stuck
        FROM seq GROUP BY 1""",
 )
 def alert_stuck_sessions(spark, sf_dir):
@@ -993,20 +949,25 @@ def alert_stuck_sessions(spark, sf_dir):
     )
 
 
+# sessionize's DuckDB twin: every event with its 1-based session_seq per
+# user, a new session after a gap of more than 12h
+_SESSIONS_SQL = """g AS (
+         SELECT event_id, user_id, ts, event_type,
+                lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+         FROM events),
+       s AS (
+         SELECT event_id, user_id, ts, event_type,
+                CAST(SUM(CASE WHEN prev_ts IS NULL
+                              OR date_diff('second', prev_ts, ts) > 43200
+                              THEN 1 ELSE 0 END)
+                     OVER (PARTITION BY user_id ORDER BY ts, event_id
+                           ROWS UNBOUNDED PRECEDING) AS INT) AS session_seq
+         FROM g)"""
+
+
 @register(
     "sessionize_events",
-    """WITH g AS (
-         SELECT event_id, user_id, ts,
-                lag(ts) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS prev_ts
-         FROM events)
-       SELECT event_id, user_id,
-              CAST(SUM(CASE WHEN prev_ts IS NULL
-                            OR date_diff('second', prev_ts, ts) > 43200
-                            THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY user_id ORDER BY ts, event_id
-                         ROWS UNBOUNDED PRECEDING) AS INT) AS session_seq
-       FROM g""",
+    f"WITH {_SESSIONS_SQL} SELECT event_id, user_id, session_seq FROM s",
 )
 def sessionize_events(spark, sf_dir):
     """Batch gap-sessionization (operators/sessionize.py): the batch twin
@@ -1023,19 +984,7 @@ def sessionize_events(spark, sf_dir):
 
 @register(
     "session_stats_events",
-    """WITH g AS (
-         SELECT event_id, user_id, ts, event_type,
-                lag(ts) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS prev_ts
-         FROM events),
-       s AS (
-         SELECT user_id, ts, event_type,
-                CAST(SUM(CASE WHEN prev_ts IS NULL
-                              OR date_diff('second', prev_ts, ts) > 43200
-                              THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS INT) AS session_seq
-         FROM g)
+    f"""WITH {_SESSIONS_SQL}
        SELECT user_id, session_seq,
               COUNT(*) AS n_events,
               MIN(ts) AS session_start,
@@ -1147,17 +1096,9 @@ _MIX_D_SQL = """d AS (
 def _mix_base(spark, sf_dir):
     """Spark mirror of _MIX_D_SQL: documents with per-doc tokens, source
     weight, and the per-source token target budget*w/wsum appended (two
-    broadcast-1-row scalar joins).
-
-    r6 considered and REVERTED (measured): persisting ``d`` so the budget
-    aggregate, weight-sum aggregate, per-source totals and the final
-    projection share one materialization — the registry plan audit shows
-    11 Exchanges for the sampled variant, mostly re-derivations of this
-    base. Interleaved A/B at sf1.0 (5 cycles each): persist 0.90 s median
-    vs recompute 0.75 s — the side reads are all map-side partial
-    aggregates over a cheap split, and cache materialization + read costs
-    more than recomputing it. Guide §5: cache only when recomputing is
-    more expensive than the memory traffic; here it is not."""
+    broadcast-1-row scalar joins). Not persisted: its side reads are
+    map-side partial aggregates over one cheap split, cheaper to recompute
+    than to cache (measured in OPTIMIZATION_r06.md §8)."""
     d = (
         t(spark, sf_dir, "documents")
         .select(
@@ -1186,8 +1127,7 @@ def _mix_base(spark, sf_dir):
                 budget * w / wsum AS target,
                 SUM(n_tok) OVER (
                   PARTITION BY source
-                  ORDER BY ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT,
-                           doc_id
+                  ORDER BY {sampling.hash32_sql("doc_id")}, doc_id
                   ROWS UNBOUNDED PRECEDING) AS cum
          FROM d, tot, ws)
        SELECT doc_id, source, n_tok FROM c WHERE cum <= target""",
@@ -1211,8 +1151,7 @@ def mix_token_budget(spark, sf_dir):
        SELECT d.doc_id, d.source, d.n_tok
        FROM d, tot, ws
        JOIN s ON d.source = s.source
-       WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-               / 4294967296.0
+       WHERE {sampling.hash32_sql("d.doc_id")} / 4294967296.0
              < LEAST(1.0, (budget * w / wsum) / tot_s)""",
 )
 def mix_token_budget_sampled(spark, sf_dir):
@@ -1259,13 +1198,10 @@ def docs_prep_pipeline(spark, sf_dir):
     Stage-by-stage invariants (doc conservation through packing, split
     totality, dedup idempotence) are pytested in tests/test_sampling.py.
 
-    Round-4 shape fix: ONE pack job grouped by (split, bucket) over ONE
-    scan — the old version ran three pack jobs over three filtered scans
-    of the cleaned table (3x the scan/pack work at 100 TB) and computed
-    token counts twice. n_tok is now computed once and carried through;
-    pack contents per split are identical to the per-split jobs (the
-    id-hash bucketing is split-independent; asserted in
-    tests/test_sampling.py)."""
+    ONE pack job grouped by (split, bucket) over ONE scan, with n_tok
+    computed once and carried through; pack contents per split equal
+    per-split jobs' (the id-hash bucketing is split-independent; asserted
+    in tests/test_sampling.py)."""
     from pyspark.sql import Window
 
     d = t(spark, sf_dir, "documents").withColumn(
@@ -1358,22 +1294,20 @@ def drift_doclen_bins(spark, sf_dir):
     return _drift_doclen_bins(spark, sf_dir)
 
 
-@register(
-    "drift_doclen_tv",
-    f"""
-WITH bins AS ({_DRIFT_BINS_SQL}),
-tot AS (SELECT SUM(n_ref) AS N, SUM(n_cur) AS M FROM bins),
+# drift.total_variation's DuckDB twin over a ``bins`` CTE (bucket, n_ref,
+# n_cur): Σ|n_i·M − m_i·N| then one exact floor-division to 6 dp
+_TV_SQL = """tot AS (SELECT SUM(n_ref) AS N, SUM(n_cur) AS M FROM bins),
 s AS (
   SELECT CAST(SUM(ABS(n_ref * M - n_cur * N)) AS BIGINT) AS tv_num,
          CAST(ANY_VALUE(N) AS BIGINT) AS N, CAST(ANY_VALUE(M) AS BIGINT) AS M
-  FROM bins, tot
-)
+  FROM bins, tot)
 SELECT tv_num, N AS n_ref_total, M AS n_cur_total,
        ((tv_num * 1000000 - (tv_num * 1000000) % (2 * N * M))
         / (2 * N * M)) / 1000000.0 AS tv
-FROM s
-""",
-)
+FROM s"""
+
+
+@register("drift_doclen_tv", f"WITH bins AS ({_DRIFT_BINS_SQL}),\n{_TV_SQL}")
 def drift_doclen_tv(spark, sf_dir):
     """Total-variation distance between the slices' length distributions
     — the drift statistic itself, computed in exact integer arithmetic
@@ -1433,17 +1367,12 @@ def text_bm25_topk(spark, sf_dir):
 
 @register(
     "events_transition_matrix",
-    """WITH seq AS (
-         SELECT user_id, event_type,
-                lag(event_type) OVER (PARTITION BY user_id
-                                      ORDER BY ts, event_id) AS prev
-         FROM events),
+    f"""WITH {_PREV_SQL},
        pairs AS (
          SELECT prev AS prev_type, event_type, count(*) AS n
          FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2)
        SELECT prev_type, event_type, CAST(n AS BIGINT) AS n,
-              ((n * 10000) // CAST(SUM(n) OVER (PARTITION BY prev_type) AS BIGINT))
-                / 10000.0 AS p
+              {_floor_frac_sql("n", "CAST(SUM(n) OVER (PARTITION BY prev_type) AS BIGINT)")} AS p
        FROM pairs""",
 )
 def events_transition_matrix(spark, sf_dir):
@@ -1475,7 +1404,7 @@ _FUNNEL_STEPS = ["signup", "click", "purchase"]
 
 @register(
     "events_funnel",
-    """WITH seq AS (
+    f"""WITH seq AS (
          SELECT user_id, event_type,
                 row_number() OVER (PARTITION BY user_id
                                    ORDER BY ts, event_id) AS rn
@@ -1494,7 +1423,7 @@ _FUNNEL_STEPS = ["signup", "click", "purchase"]
                     (SELECT count(DISTINCT user_id) FROM events) AS total)
        SELECT CAST(step_idx AS BIGINT) AS step_idx, step,
               CAST(n_keys AS BIGINT) AS n_keys,
-              ((n_keys * 10000) // total) / 10000.0 AS frac
+              {_floor_frac_sql("n_keys", "total")} AS frac
        FROM (SELECT 1 AS step_idx, 'signup' AS step, c1 AS n_keys, total FROM c
              UNION ALL
              SELECT 2, 'click', c2, total FROM c
@@ -1516,7 +1445,7 @@ def events_funnel(spark, sf_dir):
 
 @register(
     "events_retention",
-    """WITH days AS (
+    f"""WITH days AS (
          SELECT DISTINCT user_id, date_trunc('day', ts) AS d FROM events),
        firsts AS (
          SELECT user_id, min(d) AS cohort_day FROM days GROUP BY 1),
@@ -1529,10 +1458,8 @@ def events_funnel(spark, sf_dir):
                 count(DISTINCT user_id) AS n_active
          FROM j GROUP BY 1, 2)
        SELECT cohort_day, week_offset, n_active,
-              ((n_active * 10000)
-                 // (max(CASE WHEN week_offset = 0 THEN n_active END)
-                       OVER (PARTITION BY cohort_day))) / 10000.0
-                AS retention
+              {_floor_frac_sql("n_active", "max(CASE WHEN week_offset = 0 THEN n_active END)"
+                               " OVER (PARTITION BY cohort_day)")} AS retention
        FROM act""",
 )
 def events_retention(spark, sf_dir):
@@ -1576,12 +1503,8 @@ def alert_value_outliers(spark, sf_dir):
     """SELECT doc_id,
               trim(regexp_replace(regexp_replace(lower(text),
                      '[^a-z0-9 ]', ' ', 'g'), '  +', ' ', 'g')) AS norm,
-              CAST(CASE WHEN trim(regexp_replace(regexp_replace(lower(text),
-                     '[^a-z0-9 ]', ' ', 'g'), '  +', ' ', 'g')) = ''
-                   THEN 0
-                   ELSE len(string_split(trim(regexp_replace(regexp_replace(
-                     lower(text), '[^a-z0-9 ]', ' ', 'g'), '  +', ' ', 'g')),
-                     ' ')) END AS BIGINT) AS n_norm_tokens
+              CAST(CASE WHEN norm = '' THEN 0 ELSE len(string_split(norm, ' ')) END
+                   AS BIGINT) AS n_norm_tokens
        FROM documents""",
 )
 def text_normalize(spark, sf_dir):
@@ -1727,16 +1650,7 @@ bins AS (
   SELECT COALESCE(r.template, c.template) AS bucket,
          COALESCE(n_ref, 0) AS n_ref, COALESCE(n_cur, 0) AS n_cur
   FROM ref r FULL OUTER JOIN cur c ON r.template = c.template),
-tot AS (SELECT SUM(n_ref) AS N, SUM(n_cur) AS M FROM bins),
-s AS (
-  SELECT CAST(SUM(ABS(n_ref * M - n_cur * N)) AS BIGINT) AS tv_num,
-         CAST(ANY_VALUE(N) AS BIGINT) AS N, CAST(ANY_VALUE(M) AS BIGINT) AS M
-  FROM bins, tot)
-SELECT tv_num, N AS n_ref_total, M AS n_cur_total,
-       ((tv_num * 1000000 - (tv_num * 1000000) % (2 * N * M))
-        / (2 * N * M)) / 1000000.0 AS tv
-FROM s
-""",
+{_TV_SQL}""",
 )
 def drift_template_tv(spark, sf_dir):
     """Template-distribution drift: total-variation distance between the
