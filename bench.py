@@ -172,7 +172,7 @@ def run_parse_route_only(spark, path: str) -> tuple[int, float]:
         F.count(F.lit(1)).alias("n"),
         F.count("parsed.tool_name").alias("n_tool"),
         F.count("parsed.error_code").alias("n_err"),
-        F.count(F.when(F.col("sink") == "conversational", 1)).alias("n_conv"),
+        F.count(F.when(F.col("sink") == cfg.default_sink, 1)).alias("n_conv"),
         F.sum(F.length("text")).alias("chars"),
     ).collect()[0]
     secs = time.time() - t0

@@ -9,7 +9,14 @@ from watchman_spark.config import PipelineConfig
 from watchman_spark.operators import invariants as inv
 from watchman_spark.plans.pipeline import run_pipeline
 from watchman_spark.sources.warehouse import ParquetWarehouse
-from watchman_spark.synth import SynthParams, compute_golden, role_dim, synth_transcripts, tool_dim
+from watchman_spark.synth import (
+    SynthParams,
+    compute_golden,
+    conv_digest,
+    role_dim,
+    synth_transcripts,
+    tool_dim,
+)
 
 PARAMS = SynthParams(seed=23, n_convs=70, C=400, hot_cap=150)
 
@@ -54,11 +61,12 @@ def test_text_equality_audit_distributed(spark, wh):
     }
 
 
-def test_chunked_digest_equals_grouped_digest(spark):
+def test_chunked_digest_equals_reference_digest(spark):
     """Property: conv_digests_chunked (mapInPandas with carry — no pandas
     frame ever holds a whole conversation) is byte-identical to the
-    grouped-map conv_digests on random conversations with nulls and
-    shuffled input row order."""
+    reference synth.conv_digest over each conversation's turn_idx-sorted
+    texts, on random conversations with nulls and shuffled input row
+    order."""
     import random
 
     rng = random.Random(77)
@@ -73,12 +81,18 @@ def test_chunked_digest_equals_grouped_digest(spark):
         rows.append((None, i, f"null-conv turn{i}"))
     rng.shuffle(rows)
     df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
-    grouped = {r["conv_id"]: (r["digest"], r["n_turns"]) for r in inv.conv_digests(df).collect()}
+    by_conv: dict = {}
+    for conv_id, i, text in rows:
+        by_conv.setdefault(conv_id, []).append((i, text))
+    reference = {
+        c: (conv_digest([t for _, t in sorted(turns)]), len(turns))
+        for c, turns in by_conv.items()
+    }
     chunked = {
         r["conv_id"]: (r["digest"], r["n_turns"])
         for r in inv.conv_digests_chunked(df, n_partitions=3).collect()
     }
-    assert chunked == grouped and len(chunked) == 11  # 10 convs + the NULL group
+    assert chunked == reference and len(chunked) == 11  # 10 convs + the NULL group
     assert None in chunked and chunked[None][1] == 7
 
 
@@ -213,7 +227,7 @@ def test_builtin_digest_equals_grouped_map(spark):
     sha2(array_join(array_sort(collect_list(struct)))) form must stay
     byte-identical to the grouped-map applyInPandas canonicalization it
     replaced (guide §4.1) — same ordered-sequence digest semantics as
-    operators/invariants.conv_digests, keyed by user instead of conv."""
+    synth.conv_digest, keyed by user instead of conv."""
     import hashlib
 
     import pandas as pd

@@ -60,22 +60,6 @@ def test_parsed_struct_schema():
     ]
 
 
-@pytest.mark.parametrize("engine", ["jvm", "pandas"])
-def test_prefilter_equivalent(base, engine):
-    """Literal prefilters are a pure optimization: identical results."""
-    from dataclasses import replace
-
-    from watchman_spark.config import DEFAULT_PATTERNS
-
-    pref = (
-        replace(DEFAULT_PATTERNS[0], prefilter="[tool:"),
-        replace(DEFAULT_PATTERNS[1], prefilter="ERROR E"),
-    )
-    a = flatten_parsed(with_parsed(base, DEFAULT_PATTERNS, engine=engine)).orderBy("turn_idx")
-    b = flatten_parsed(with_parsed(base, pref, engine=engine)).orderBy("turn_idx")
-    assert [tuple(r) for r in a.collect()] == [tuple(r) for r in b.collect()]
-
-
 def test_patterns_json_roundtrip(base, tmp_path):
     """SURVEY §3.1 step 1: the registry is config-file data. A registry
     serialized to JSON and loaded back is equal and drives the parser
@@ -114,6 +98,11 @@ def test_patterns_json_validation(tmp_path):
         )
     with _pytest.raises(ValueError):  # empty registry
         load_config(write({"patterns": []}))
+    # a key the loader does not read is ignored: an older file that still
+    # sets a pattern's removed literal gate loads as before
+    p0 = DEFAULT_PATTERNS[0]
+    old = {"name": p0.name, "regex": p0.regex, "types": p0.types, "prefilter": "[tool:"}
+    assert load_config(write({"patterns": [old]}))[0] == (p0,)
 
 
 def test_job_run_with_patterns_file(spark, tmp_path):

@@ -96,6 +96,29 @@ def test_idempotent_rerun(spark, warehouse):
     assert after == before
 
 
+def test_run_jobs_carry_the_callers_job_group(spark, params, tmp_path):
+    """Every job of a run, the two concurrent read-back jobs included,
+    runs in the caller's job group: a thread-pool thread does not inherit
+    the driver thread's local properties unless its target is wrapped."""
+    wh = ParquetWarehouse(str(tmp_path / "wh"))
+    wh.write_append(synth_transcripts(spark, params), "transcripts")
+    wh.write_append(role_dim(spark), "role_dim")
+    wh.write_append(tool_dim(spark), "tool_dim")
+    cfg = PipelineConfig(warehouse=wh.root, n_buckets=8, run_id="grouped")
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("caller-group", "run under a caller's job group")
+    try:
+        m = run_pipeline(spark, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert m.rows_in == params.total_rows
+    assert set(tracker.getJobIdsForGroup("caller-group"))
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped == set()
+
+
 def test_custom_routes_end_to_end(spark, tmp_path):
     """Configurable output routing (BASELINE.json:6): an operator adds a
     sink by config, not code. A 4th route peels high-latency tool calls

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -24,21 +25,13 @@ class GrokPattern:
     """One named extraction pattern.
 
     ``regex`` uses Python named-group syntax ``(?P<name>...)``; the JVM path
-    converts to Java syntax ``(?<name>...)`` automatically. ``types`` maps
-    group name -> "int" | "string" (default string).
-
-    ``prefilter`` is an optional literal substring that every matching line
-    must contain — a cheap non-regex gate applied before the regex (both
-    engines). On a log-typical mix most lines match no pattern, so the
-    prefilter skips the expensive extraction for the majority of rows.
-    Correctness is unaffected: rows failing the prefilter cannot match the
-    regex (the literal is a substring of the pattern).
+    strips the names to plain groups (``java_regex``) and extracts by group
+    index. ``types`` maps group name -> "int" | "string" (default string).
     """
 
     name: str
     regex: str
     types: dict[str, str] = field(default_factory=dict)
-    prefilter: str | None = None
 
     @property
     def groups(self) -> list[str]:
@@ -78,8 +71,6 @@ DEFAULT_PATTERNS: tuple[GrokPattern, ...] = (
         types={"err_ms": "int"},
     ),
 )
-# Prefilters stay OFF: these literal-anchored regexes already fail in one
-# linear scan, so a contains() gate only re-scans (BENCH/PREFILTER.md).
 
 # Output routing is DATA too (BASELINE.json:6 "mirroring watchman's
 # configurable output routing"): an ordered list of (sink_name, SQL
@@ -93,6 +84,7 @@ DEFAULT_ROUTES: tuple[tuple[str, str], ...] = (
     ("tool_calls", "parsed.tool_name IS NOT NULL"),
 )
 DEFAULT_SINK = "conversational"
+DEFAULT_SINKS = tuple(r[0] for r in DEFAULT_ROUTES) + (DEFAULT_SINK,)
 
 _SINK_NAME = re.compile(r"^[a-z][a-z0-9_]*$")
 
@@ -113,7 +105,6 @@ def _parse_patterns(data: dict, path: str) -> tuple[GrokPattern, ...]:
             name=p["name"],
             regex=p["regex"],
             types=dict(p.get("types", {})),
-            prefilter=p.get("prefilter"),
         )
         pat.compiled()  # validate regex now
         if not pat.groups:
@@ -153,7 +144,7 @@ def load_config(
     operator adds one by editing config, not code. File shape:
 
         {"patterns": [{"name": "...", "regex": "...",
-                       "types": {"group": "int"}, "prefilter": "..."}],
+                       "types": {"group": "int"}}],
          "routes": [{"sink": "errors", "when": "parsed.error_code IS NOT NULL"},
                     ...],
          "default_sink": "conversational"}
@@ -165,7 +156,9 @@ def load_config(
     parsed (and its columns resolved) when the routing CASE chain is
     analyzed at plan setup — still before any read or write runs. The
     ``parsed`` struct schema is computed from the loaded registry exactly
-    as for the code-default one."""
+    as for the code-default one. Keys the loader does not read are
+    ignored, so an older file whose patterns still carry the removed
+    literal-substring gate key loads as before (it never changed a result)."""
     import json as _json
 
     with open(path) as f:
@@ -183,13 +176,7 @@ def patterns_to_json(patterns: tuple[GrokPattern, ...]) -> str:
     return _json.dumps(
         {
             "patterns": [
-                {
-                    "name": p.name,
-                    "regex": p.regex,
-                    "types": p.types,
-                    **({"prefilter": p.prefilter} if p.prefilter else {}),
-                }
-                for p in patterns
+                {"name": p.name, "regex": p.regex, "types": p.types} for p in patterns
             ]
         },
         indent=1,
@@ -222,13 +209,8 @@ class PipelineConfig:
     routes: tuple[tuple[str, str], ...] = DEFAULT_ROUTES
     default_sink: str = DEFAULT_SINK
     n_buckets: int = 32  # conv_id hash buckets = checkpoint/work unit
-    # "pandas" (Arrow iterator UDF, one C-level str.extract per pattern)
-    # | "jvm" (rlike + regexp_extract; zero Python boundary). jvm measured
-    # ~2x faster on the small default registry; registries with tens of
-    # patterns/groups favour "pandas", because jvm re-runs the regex once
-    # per capture group. Measurements: OPTIMIZATION_r06.md "Parse engine
-    # default (notes moved from code)".
-    parse_engine: str = "jvm"
+    # the routed write's parse engine (OPTIMIZATION_r06.md "Parse engine default")
+    parse_engine: ClassVar[str] = "jvm"
     run_id: str = "run-0"
     # cap buckets per run (None = all pending): bounds a run's blast radius
     # at 10^12 scale and lets operators drip through the backlog

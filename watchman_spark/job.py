@@ -68,7 +68,6 @@ def cmd_run(args) -> int:
         routes=routes,
         default_sink=default_sink,
         n_buckets=args.buckets,
-        parse_engine=args.parse_engine,
         run_id=args.run_id,
         max_buckets_per_run=args.max_buckets,
     )
@@ -312,9 +311,9 @@ def cmd_templates(args) -> int:
     unchanged table appends nothing, and the next ingest's new error
     shape trips the gate before anyone greps raw logs. A tripped gate
     does NOT append — the alert persists across reruns until an operator
-    acknowledges with --ack (r5 advice: a CI retry must not silently
-    clear it). The templates exchange carries n_templates rows; the raw
-    text never shuffles."""
+    acknowledges with --ack (a CI retry must not silently clear it). The
+    templates exchange carries n_templates rows; the raw text never
+    shuffles."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
@@ -339,7 +338,7 @@ def cmd_templates(args) -> int:
     n_novel = novel.count()
     sample = novel.orderBy(F.col("n").desc(), "template").limit(20).collect()
     alert = (not baseline) and n_novel > args.max_novel
-    # a TRIPPED gate must persist until acknowledged (r5 advice): appending
+    # a TRIPPED gate must persist until acknowledged: appending
     # the novel templates on the alerting run would make any blind rerun
     # (CI retry, cron) exit 0 with nobody having looked. The append happens
     # on clean runs and baselines; --ack commits the novel set despite the
@@ -438,9 +437,6 @@ def main(argv: list[str] | None = None) -> int:
     pr = sub.add_parser("run", help="run the batch pipeline (resumable)")
     _add_common(pr)
     pr.add_argument("--buckets", type=int, default=32)
-    # default tracks PipelineConfig.parse_engine (jvm since r6 — see
-    # config.py for the measured engine trade)
-    pr.add_argument("--parse-engine", choices=["pandas", "jvm"], default="jvm")
     pr.add_argument(
         "--patterns",
         default=None,

@@ -14,9 +14,9 @@ from pyspark.sql import functions as F
 
 from ..schema import TRANSCRIPT_SCHEMA
 from ..sources.warehouse import ParquetWarehouse
+from ..synth import DIGEST_SEP, NULL_SENTINEL
 
 BASE_COLS = [f.name for f in TRANSCRIPT_SCHEMA.fields]
-NULL_SENTINEL = "\x00NULL"
 
 
 def sink_names(wh: ParquetWarehouse) -> list[str]:
@@ -58,46 +58,23 @@ def sinks_disjoint(spark: SparkSession, wh: ParquetWarehouse) -> bool:
     return keys.distinct().count() == keys.count()
 
 
-def conv_digests(df: DataFrame) -> DataFrame:
-    """A8/U3: per-conversation sha256 over turn_idx-ordered texts — the
-    text-equality invariant's canonical form. Must match synth.conv_digest
-    byte-for-byte (same sentinel, same separator)."""
-
-    def digest(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("turn_idx")
-        joined = "\x1f".join(
-            NULL_SENTINEL if t is None else t for t in pdf["text"]
-        )
-        return pd.DataFrame(
-            {
-                "conv_id": [pdf["conv_id"].iloc[0]],
-                "digest": [hashlib.sha256(joined.encode("utf-8")).hexdigest()],
-                "n_turns": [len(pdf)],
-            }
-        )
-
-    return (
-        df.select("conv_id", "turn_idx", "text")
-        .groupBy("conv_id")
-        .applyInPandas(digest, "conv_id string, digest string, n_turns long")
-    )
-
-
 def conv_digests_chunked(df: DataFrame, n_partitions: int | None = None) -> DataFrame:
-    """Scale-safe variant of conv_digests: NO single pandas frame ever holds
-    a whole conversation (applyInPandas materializes each group — a 10⁷-turn
-    pathological conversation at 10^12 scale would OOM one Python worker).
+    """A8/U3: per-conversation (conv_id, digest, n_turns), the digest being
+    synth.conv_digest over the turn_idx-ordered texts — the text-equality
+    invariant's canonical form. Scale-safe: NO single pandas frame ever
+    holds a whole conversation (a grouped-map applyInPandas would, and a
+    10⁷-turn pathological conversation at 10^12 scale would OOM one Python
+    worker).
 
     Shape: hash-partition by conv_id (a conversation never spans partitions),
     sortWithinPartitions(conv_id, turn_idx), then ONE mapInPandas pass that
     streams Arrow batches in partition order carrying a running
     hashlib.sha256 per current conversation across batch boundaries. sha256
-    is incremental, so feeding it text⟨0⟩, '\\x1f', text⟨1⟩, ... chunk by
-    chunk produces byte-identical digests to conv_digests' single-shot
-    sha256('\\x1f'.join(texts)) — property-tested in tests/test_invariants.py,
-    including under a forced tiny Arrow batch size on a 500k-turn
-    conversation. Peak Python memory is one Arrow batch, independent of
-    conversation size."""
+    is incremental, so feeding it text⟨0⟩, DIGEST_SEP, text⟨1⟩, ... chunk by
+    chunk produces byte-identical digests to the single-shot conv_digest —
+    property-tested in tests/test_invariants.py, including under a forced
+    tiny Arrow batch size on a 500k-turn conversation. Peak Python memory
+    is one Arrow batch, independent of conversation size."""
     n = n_partitions or df.sparkSession.sparkContext.defaultParallelism
     _START = object()  # distinct from None: a NULL conv_id is a real group
 
@@ -121,8 +98,8 @@ def conv_digests_chunked(df: DataFrame, n_partitions: int | None = None) -> Data
             # python cost is one iteration per DISTINCT conversation.
             # dropna=False: rows with NULL conv_id are a legitimate group
             # (Spark's groupBy keys nulls too) — the pandas default would
-            # silently DROP them from the audit (caught in code review;
-            # pinned in tests/test_invariants.py with null conv_ids)
+            # silently DROP them from the audit (pinned in
+            # tests/test_invariants.py with null conv_ids)
             for conv_id, g in pdf.groupby("conv_id", sort=False, dropna=False):
                 if conv_id is not None and pd.isna(conv_id):
                     conv_id = None  # normalize possible NaN key to None
@@ -131,8 +108,8 @@ def conv_digests_chunked(df: DataFrame, n_partitions: int | None = None) -> Data
                         emit()
                     cur_id, cur_hash, cur_n = conv_id, hashlib.sha256(), 0
                 elif cur_n > 0:
-                    cur_hash.update(b"\x1f")
-                joined = "\x1f".join(
+                    cur_hash.update(DIGEST_SEP.encode("utf-8"))
+                joined = DIGEST_SEP.join(
                     NULL_SENTINEL if t is None else t for t in g["text"]
                 )
                 cur_hash.update(joined.encode("utf-8"))
@@ -162,7 +139,7 @@ def text_equality_digests(
     df = union_of_sinks(spark, wh, ["conv_id", "turn_idx", "text"])
     if sample_convs:
         df = df.filter(F.col("conv_id").isin(sample_convs))
-    return {r["conv_id"]: r["digest"] for r in conv_digests(df).collect()}
+    return {r["conv_id"]: r["digest"] for r in conv_digests_chunked(df).collect()}
 
 
 def digest_mismatches(actual: DataFrame, golden: DataFrame) -> dict:
@@ -178,8 +155,7 @@ def digest_mismatches(actual: DataFrame, golden: DataFrame) -> dict:
     digests the NULL-conv_id group on both sides, and a plain equi-join
     would never match those keys — a warehouse containing null-conv rows
     would then report missing=1/extra=1 forever even when the texts are
-    identical (round-4 advice fix; pinned with a null-conv case in
-    tests/test_invariants.py)."""
+    identical (pinned with a null-conv case in tests/test_invariants.py)."""
     a = actual.select(F.col("conv_id").alias("__ca"), F.col("digest").alias("__da"))
     g = golden.select(F.col("conv_id").alias("__cg"), F.col("digest").alias("__dg"))
     row = (

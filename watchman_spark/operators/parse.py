@@ -6,13 +6,10 @@ risk #3), both returning the identical ``parsed`` struct:
 - ``jvm``: pure built-in ``rlike`` + ``regexp_extract`` expressions — stays
   inside whole-stage codegen, zero Python boundary. Preferred for simple
   registries (it re-evaluates the regex once per capture group, which the
-  JVM regex engine handles cheaply for anchored-prefix patterns).
-  Considered and REJECTED (round 3, measured): collapsing the per-group
-  regexp_extracts into ONE regexp_replace("$1\\x1e$2...") + split — 15%
-  faster on the bench corpus (0.90s vs 1.04s forced over 9.4M rows,
-  byte-identical output) but introduces a delimiter-collision hazard (a
-  literal \\x1e inside a captured group mis-splits silently); ~5% of
-  end-to-end wall is not worth a silent-corruption class.
+  JVM regex engine handles cheaply for anchored-prefix patterns). One
+  regexp_replace + split in place of the per-group extracts is rejected:
+  a delimiter inside a captured group would mis-split silently
+  (OPTIMIZATION_r06.md "Parse engine default").
 - ``pandas``: one Arrow-vectorized iterator pandas UDF applying
   ``pandas.Series.str.extract`` per pattern — regexes compiled once per
   Python worker, batches streamed (no per-row Python, BASELINE.json:15).
@@ -39,14 +36,8 @@ def _jvm_parsed_col(patterns: tuple[GrokPattern, ...], text_col: str) -> Column:
     """Build the parsed struct from built-in expressions (engine="jvm")."""
     schema = parsed_struct(patterns)
     text = F.col(text_col)
-    # Pre-compute one match flag per pattern so each rlike appears once;
-    # the literal prefilter short-circuits the regex for non-matching rows.
-    match_flags = {}
-    for p in patterns:
-        flag = text.isNotNull()
-        if p.prefilter:
-            flag = flag & text.contains(p.prefilter)
-        match_flags[p.name] = flag & text.rlike(p.java_regex)
+    # one match flag per pattern so each rlike appears once
+    match_flags = {p.name: text.isNotNull() & text.rlike(p.java_regex) for p in patterns}
     fields: list[Column] = []
     for field in schema.fields:
         # first pattern that declares this group and matches wins
@@ -76,19 +67,14 @@ def _pandas_parsed_udf(patterns: tuple[GrokPattern, ...]):
     schema = parsed_struct(patterns)
     int_fields = {f.name for f in schema.fields if isinstance(f.dataType, IntegerType)}
     field_order = [f.name for f in schema.fields]
-    pats = [(p.compiled(), p.groups, p.prefilter) for p in patterns]
+    pats = [(p.compiled(), p.groups) for p in patterns]
 
     @pandas_udf(returnType=schema)
     def grok(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         for s in batches:
             out = pd.DataFrame(index=s.index)
-            for compiled, groups, prefilter in pats:
-                if prefilter is not None:
-                    # cheap literal gate: regex-extract only candidate rows
-                    mask = s.str.contains(prefilter, regex=False, na=False)
-                    ext = s[mask].str.extract(compiled).reindex(s.index)
-                else:
-                    ext = s.str.extract(compiled)
+            for compiled, groups in pats:
+                ext = s.str.extract(compiled)
                 for g in groups:
                     if g in out.columns:
                         out[g] = out[g].where(out[g].notna(), ext[g])
@@ -109,18 +95,18 @@ def with_parsed(
     patterns: tuple[GrokPattern, ...] = DEFAULT_PATTERNS,
     engine: str = "jvm",
     text_col: str = "text",
-    out_col: str = "parsed",
 ) -> DataFrame:
-    """Append the ``parsed`` struct column (null fields where no match)."""
+    """Append the ``parsed`` struct column (null fields where no match);
+    route conditions name ``parsed.<group>``, so the name is fixed."""
     if engine == "jvm":
-        return df.withColumn(out_col, _jvm_parsed_col(patterns, text_col))
+        return df.withColumn("parsed", _jvm_parsed_col(patterns, text_col))
     if engine == "pandas":
-        return df.withColumn(out_col, _pandas_parsed_udf(patterns)(F.col(text_col)))
+        return df.withColumn("parsed", _pandas_parsed_udf(patterns)(F.col(text_col)))
     raise ValueError(f"unknown parse engine: {engine!r}")
 
 
-def flatten_parsed(df: DataFrame, struct_col: str = "parsed") -> DataFrame:
+def flatten_parsed(df: DataFrame) -> DataFrame:
     """Flatten the parsed struct into top-level columns (sink schema)."""
-    names = df.schema[struct_col].dataType.fieldNames()
-    keep = [c for c in df.columns if c != struct_col]
-    return df.select(*keep, *[F.col(f"{struct_col}.{n}").alias(n) for n in names])
+    names = df.schema["parsed"].dataType.fieldNames()
+    keep = [c for c in df.columns if c != "parsed"]
+    return df.select(*keep, *[F.col(f"parsed.{n}").alias(n) for n in names])

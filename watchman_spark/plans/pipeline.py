@@ -41,6 +41,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -255,9 +256,16 @@ def run_pipeline(
                     .collect()
                 }
 
+            def _inherit(job):
+                # pool threads do not inherit the caller's local properties
+                # (job group, scheduler pool); each job gets its own copy.
+                # With PYSPARK_PIN_THREAD=false the call hands back the session.
+                wrap = inheritable_thread_target(spark)
+                return wrap(job) if callable(wrap) else job
+
             with ThreadPoolExecutor(max_workers=2) as pool:
-                fut_a = pool.submit(_job_a)
-                fut_b = pool.submit(_job_b)
+                fut_a = pool.submit(_inherit(_job_a))
+                fut_b = pool.submit(_inherit(_job_b))
                 dc = fut_b.result()
                 fut_a.result()
             m.parse_miss = st.sink_n_text.get(cfg.default_sink, 0)

@@ -291,8 +291,8 @@ def udf_conv_digest(spark, sf_dir):
     # Null contract: a null ts sorts after every timestamp; a null
     # event_type is skipped (array_join and string_agg both drop it); a
     # user whose event_types are all null digests sha256("") here and NULL
-    # in DuckDB. The grouped-map applyInPandas operator (SURVEY U3) remains
-    # operators/invariants.py conv_digests, pytested in
+    # in DuckDB. The per-conversation text digest (SURVEY U3) is
+    # operators/invariants.py conv_digests_chunked, pytested in
     # tests/test_invariants.py.
     ev = t(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     key = F.struct(F.col("ts").isNull().alias("ts_null"), "ts", "event_id", "event_type")

@@ -18,6 +18,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .config import DEFAULT_SINKS
+
 TRANSCRIPT_SCHEMA = StructType(
     [
         StructField("conv_id", StringType(), False),
@@ -45,5 +47,5 @@ TOOL_DIM_SCHEMA = StructType(
     ]
 )
 
-SINKS = ("errors", "tool_calls", "conversational")
+SINKS = DEFAULT_SINKS
 

@@ -26,7 +26,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .schema import ROLE_DIM_SCHEMA, TOOL_DIM_SCHEMA, TRANSCRIPT_SCHEMA
+from .schema import ROLE_DIM_SCHEMA, SINKS, TOOL_DIM_SCHEMA, TRANSCRIPT_SCHEMA
 
 EPOCH_2025 = 1735689600  # 2025-01-01T00:00:00Z in unix seconds
 
@@ -71,9 +71,7 @@ NOISE = (
     "☃ ❤ ♫",
 )
 
-SINK_ERRORS = "errors"
-SINK_TOOLS = "tool_calls"
-SINK_CONV = "conversational"
+SINK_ERRORS, SINK_TOOLS, SINK_CONV = SINKS
 
 
 def stable_hash(*parts: object) -> int:
@@ -195,10 +193,15 @@ def tool_dim(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(rows, schema=TOOL_DIM_SCHEMA)
 
 
+# The text-equality digest's canonical form, shared with the scale-safe
+# audit (operators/invariants.conv_digests_chunked).
+NULL_SENTINEL = "\x00NULL"  # no real text contains it
+DIGEST_SEP = "\x1f"
+
+
 def conv_digest(texts: list[str | None]) -> str:
-    """sha256 over turn_idx-ordered texts; None is canonicalized to a
-    sentinel that no real text contains. Must match invariants.py exactly."""
-    joined = "\x1f".join("\x00NULL" if t is None else t for t in texts)
+    """sha256 over turn_idx-ordered texts, NULL_SENTINEL for a None text."""
+    joined = DIGEST_SEP.join(NULL_SENTINEL if t is None else t for t in texts)
     return hashlib.sha256(joined.encode("utf-8")).hexdigest()
 
 
